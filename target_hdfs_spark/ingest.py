@@ -19,7 +19,14 @@ import json
 import sys
 
 from target_hdfs_spark import __version__
-from target_hdfs_spark.config import TargetConfig, config_from_env
+from target_hdfs_spark.config import (
+    VALID_COMPRESSION,
+    VALID_ON_INVALID,
+    VALID_SCHEMA_EVOLUTION,
+    VALID_TABLE_FORMATS,
+    TargetConfig,
+    config_from_env,
+)
 from target_hdfs_spark.session import get_spark
 from target_hdfs_spark.sources.singer import SingerPipe
 
@@ -33,7 +40,7 @@ ABOUT = {
         "compression_method": {
             "type": "string",
             "default": "gzip",
-            "enum": ["gzip", "snappy", "zstd", "brotli", "none"],
+            "enum": list(VALID_COMPRESSION),
         },
         "partition_cols": {"type": "string"},
         "extra_fields": {"type": "string"},
@@ -41,21 +48,22 @@ ABOUT = {
         "add_record_metadata": {"type": "boolean", "default": False},
         "max_batch_size": {"type": "integer", "default": 10000},
         "flattening_max_depth": {"type": ["integer", "null"]},
+        "stream_maps": {"type": ["object", "null"]},
         "target_file_bytes": {"type": ["integer", "string", "null"]},
         "table_format": {
             "type": "string",
             "default": "parquet",
-            "enum": ["parquet", "orc", "delta", "iceberg"],
+            "enum": list(VALID_TABLE_FORMATS),
         },
         "schema_evolution": {
             "type": "string",
             "default": "strict",
-            "enum": ["strict", "additive"],
+            "enum": list(VALID_SCHEMA_EVOLUTION),
         },
         "on_invalid_record": {
             "type": "string",
             "default": "fail",
-            "enum": ["fail", "skip", "dlq"],
+            "enum": list(VALID_ON_INVALID),
         },
     },
 }

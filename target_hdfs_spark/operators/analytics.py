@@ -866,10 +866,10 @@ def _gap_pattern_masks(
     position NOT to be the type (the negated-gap form). Row 0 (the
     match start) is constrained separately to spec['first'] (a type
     or an alternation tuple)."""
-    from target_hdfs_spark.streaming.stateful import _gap_form
+    from target_hdfs_spark.streaming.stateful import gap_form
 
     masks = []
-    form = _gap_form(spec)
+    form = gap_form(spec)
     if form == "steps":
         # multi-step gapped sequence `A .. B .. C within K`: for each
         # completion index j (ascending -> earliest completion wins in
@@ -926,12 +926,12 @@ def _gap_pattern_oracle(patterns: dict[str, dict] | None = None) -> str:
     of the stream); alternation starts compile to an IN list."""
     from target_hdfs_spark.streaming.stateful import (
         GAP_PATTERNS,
-        _gap_first,
-        _gap_keep,
+        gap_first,
+        gap_keep,
     )
 
     patterns = patterns or GAP_PATTERNS
-    keep = _gap_keep(patterns)
+    keep = gap_keep(patterns)
     leads = ",\n             ".join(
         f"lead(event_type, {i}) OVER w AS t{i}, "
         f"lead(event_id, {i}) OVER w AS id{i}"
@@ -947,7 +947,7 @@ def _gap_pattern_oracle(patterns: dict[str, dict] | None = None) -> str:
             )
             arms_id.append(f"WHEN {cond} THEN id{j}")
             arms_span.append(f"WHEN {cond} THEN {j + 1}")
-        firsts = ", ".join(f"'{t}'" for t in _gap_first(spec))
+        firsts = ", ".join(f"'{t}'" for t in gap_first(spec))
         branches.append(
             f"SELECT user_id, '{name}' AS pattern, event_id AS first_event_id,\n"
             f"           CASE {' '.join(arms_id)} END AS last_event_id,\n"
@@ -1005,9 +1005,9 @@ def _gapped_match_plan(
     frame is eagerly checkpointed, and each pattern is a map-side
     when-chain over the compiled masks (ordered -> earliest
     completion per start)."""
-    from target_hdfs_spark.streaming.stateful import _gap_first, _gap_keep
+    from target_hdfs_spark.streaming.stateful import gap_first, gap_keep
 
-    keep = _gap_keep(patterns)
+    keep = gap_keep(patterns)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
@@ -1031,7 +1031,7 @@ def _gapped_match_plan(
             )
             hit = F.when(cond, arm) if hit is None else hit.when(cond, arm)
         branch = (
-            seq.filter(F.col("event_type").isin(*_gap_first(spec)))
+            seq.filter(F.col("event_type").isin(*gap_first(spec)))
             .select(
                 "user_id",
                 F.lit(name).alias("pattern"),
@@ -6742,18 +6742,18 @@ def q252_kmv_rolling_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 # Fixed-boundary integer histogram: values are floored to integer
-# units, clamped to [0, _QSK_W * _QSK_NBKT), and counted into
+# units, clamped to [0, QSK_W * QSK_NBKT), and counted into
 # fixed-width buckets. Bucket boundaries are CONSTANTS (never
 # data-dependent like KLL/t-digest centroids), so two engines — or
 # two executors — always build bit-identical cells, and merging is
 # CELL ADDITION (the CountMin monoid). Rank queries walk the
 # cumulative histogram; value error is bounded by the bucket width.
-_QSK_W = 32  # bucket width, integer price units
-_QSK_NBKT = 4096  # bucket-count cap -> domain [0, 131072)
+QSK_W = 32  # bucket width, integer price units
+QSK_NBKT = 4096  # bucket-count cap -> domain [0, 131072)
 _QSK_PCTS = (25, 50, 75)  # readout percentiles (q99's surface)
 
 
-def _qsk_bucket_sql(expr: str, w: int, nbkt: int) -> str:
+def qsk_bucket_sql(expr: str, w: int, nbkt: int) -> str:
     """DuckDB-side bucket: clamp floor(expr) into the fixed domain,
     integer-divide by the width."""
     return (
@@ -6762,7 +6762,7 @@ def _qsk_bucket_sql(expr: str, w: int, nbkt: int) -> str:
     )
 
 
-def _qsk_bucket_expr(expr: str, w: int, nbkt: int):
+def qsk_bucket_expr(expr: str, w: int, nbkt: int):
     """Spark-side bucket — the same clamp + integer division (`div`
     is Spark SQL's integer division, `//` DuckDB's; both truncate)."""
     return F.expr(
@@ -6777,7 +6777,7 @@ def _qsk_rank_sql(p: int) -> str:
     return f"(n * {p} + 99) // 100"
 
 
-def _qsk_estimates(
+def qsk_estimates(
     hist: DataFrame,
     keys: list[str],
     w: int,
@@ -6825,7 +6825,7 @@ def _qsk_estimates(
     return cum.groupBy(*keys).agg(*aggs)
 
 
-def _qsk_est_sql(
+def qsk_est_sql(
     src: str,
     keys: str,
     w: int,
@@ -6858,7 +6858,7 @@ def _qsk_est_sql(
 
 
 def _qsk_calibration_oracle() -> str:
-    bkt = _qsk_bucket_sql("l_extendedprice", _QSK_W, _QSK_NBKT)
+    bkt = qsk_bucket_sql("l_extendedprice", QSK_W, QSK_NBKT)
     ex_lines = ",\n         ".join(
         f"quantile_cont(l_extendedprice, {p / 100}) AS exact_p{p}"
         for p in _QSK_PCTS
@@ -6879,7 +6879,7 @@ def _qsk_calibration_oracle() -> str:
       FROM v GROUP BY 1, 2
     ),
     est AS (
-      {_qsk_est_sql("hist", "l_returnflag", _QSK_W, _QSK_PCTS, True)}
+      {qsk_est_sql("hist", "l_returnflag", QSK_W, _QSK_PCTS, True)}
     ),
     ex AS (
       SELECT l_returnflag,
@@ -6908,8 +6908,8 @@ def q253_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q20's percentile_approx KLL sketch has engine-specific
     internals; this sketch's state is portable integer cells, so the
     oracle rebuilds it bit-identically). Values are floored to
-    integer units, clamped into [0, {_QSK_W}*{_QSK_NBKT}), and
-    counted into width-{_QSK_W} buckets whose boundaries are
+    integer units, clamped into [0, {QSK_W}*{QSK_NBKT}), and
+    counted into width-{QSK_W} buckets whose boundaries are
     CONSTANTS — never data-dependent like KLL compactors or t-digest
     centroids, which is what makes two executors' (or two engines')
     partials bit-identical and merging plain cell addition. A rank
@@ -6925,11 +6925,11 @@ def q253_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one pass to per-(group, bucket) counts with map-side
     combine; the cumulative walk runs on the histogram frame (<=
-    {_QSK_NBKT} rows per group — sketch-sized, never row-sized), so
+    {QSK_NBKT} rows per group — sketch-sized, never row-sized), so
     a 100 TB column costs one scan while the exact side's per-group
     value materialization (the q99 trade) is the term this sketch
     lets a production pipeline drop. At any scale the sketch is <=
-    {_QSK_NBKT} int64 cells per group.
+    {QSK_NBKT} int64 cells per group.
 
     Cites reference behavior: none (beyond-reference operator).
     """
@@ -6938,10 +6938,10 @@ def q253_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hist = li.groupBy(
         "l_returnflag",
-        _qsk_bucket_expr("l_extendedprice", _QSK_W, _QSK_NBKT).alias("bkt"),
+        qsk_bucket_expr("l_extendedprice", QSK_W, QSK_NBKT).alias("bkt"),
     ).agg(F.count(F.lit(1)).alias("c"))
-    est = _qsk_estimates(
-        hist, ["l_returnflag"], _QSK_W, _QSK_PCTS, with_counts=True
+    est = qsk_estimates(
+        hist, ["l_returnflag"], QSK_W, _QSK_PCTS, with_counts=True
     )
     ex = li.groupBy("l_returnflag").agg(
         *[
@@ -6968,7 +6968,7 @@ def q253_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _qsk_merge_law_oracle() -> str:
-    bkt = _qsk_bucket_sql("l_extendedprice", _QSK_W, _QSK_NBKT)
+    bkt = qsk_bucket_sql("l_extendedprice", QSK_W, QSK_NBKT)
     return f"""
     WITH v AS MATERIALIZED (
       SELECT l_returnflag, l_linestatus, {bkt} AS bkt FROM lineitem
@@ -6993,8 +6993,8 @@ def _qsk_merge_law_oracle() -> str:
         (SELECT * FROM direct EXCEPT SELECT * FROM merged)
       )
     ),
-    est_m AS ({_qsk_est_sql("merged", "l_returnflag", _QSK_W, (50,))}),
-    est_d AS ({_qsk_est_sql("direct", "l_returnflag", _QSK_W, (50,))}),
+    est_m AS ({qsk_est_sql("merged", "l_returnflag", QSK_W, (50,))}),
+    est_d AS ({qsk_est_sql("direct", "l_returnflag", QSK_W, (50,))}),
     rdiff AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n_diff
       FROM est_m m JOIN est_d d
@@ -7038,7 +7038,7 @@ def q254_quantile_merge_law(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one pass to the per-(group, sub-partition, bucket) partial
     frame (map-side combine); merged/direct/diff/readout all run on
-    histogram frames (<= groups x {_QSK_NBKT} cells — sketch-sized).
+    histogram frames (<= groups x {QSK_NBKT} cells — sketch-sized).
     The direct side exists only as the theorem's independent
     construction; production keeps the partials.
 
@@ -7047,7 +7047,7 @@ def q254_quantile_merge_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         "l_linestatus",
-        _qsk_bucket_expr("l_extendedprice", _QSK_W, _QSK_NBKT).alias("bkt"),
+        qsk_bucket_expr("l_extendedprice", QSK_W, QSK_NBKT).alias("bkt"),
     )
     partials = (
         v.groupBy("l_returnflag", "l_linestatus", "bkt")
@@ -7065,8 +7065,8 @@ def q254_quantile_merge_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(direct.exceptAll(merged))
         .agg(F.count(F.lit(1)).alias("n_diff"))
     )
-    est_m = _qsk_estimates(merged, ["l_returnflag"], _QSK_W, (50,))
-    est_d = _qsk_estimates(direct, ["l_returnflag"], _QSK_W, (50,)).select(
+    est_m = qsk_estimates(merged, ["l_returnflag"], QSK_W, (50,))
+    est_d = qsk_estimates(direct, ["l_returnflag"], QSK_W, (50,)).select(
         "l_returnflag", F.col("est_p50").alias("_d50")
     )
     rdiff = (
@@ -7098,7 +7098,7 @@ _QSK_ROLL_DAYS = 3  # trailing window width (d-2 .. d)
 
 
 def _qsk_roll_oracle() -> str:
-    bkt = _qsk_bucket_sql("value * 100", _QSK_EV_W, _QSK_EV_NBKT)
+    bkt = qsk_bucket_sql("value * 100", _QSK_EV_W, _QSK_EV_NBKT)
     return f"""
     WITH e AS MATERIALIZED (
       SELECT event_type, CAST(ts AS DATE) AS day, {bkt} AS bkt,
@@ -7118,7 +7118,7 @@ def _qsk_roll_oracle() -> str:
       GROUP BY 1, 2, 3
     ),
     est AS (
-      {_qsk_est_sql("pooled", "event_type, day", _QSK_EV_W, (50, 90), True)}
+      {qsk_est_sql("pooled", "event_type, day", _QSK_EV_W, (50, 90), True)}
     ),
     ex AS (
       SELECT d.event_type, d.day,
@@ -7178,7 +7178,7 @@ def q255_quantile_rolling_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.to_date("ts").alias("day"),
-        _qsk_bucket_expr("value * 100", _QSK_EV_W, _QSK_EV_NBKT).alias("bkt"),
+        qsk_bucket_expr("value * 100", _QSK_EV_W, _QSK_EV_NBKT).alias("bkt"),
         F.expr("CAST(floor(value * 100) AS BIGINT)").alias("cents"),
     )
     daily = (
@@ -7212,7 +7212,7 @@ def q255_quantile_rolling_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c",
         )
     )
-    est = _qsk_estimates(
+    est = qsk_estimates(
         pooled, ["event_type", "day"], _QSK_EV_W, (50, 90), with_counts=True
     )
     exact = (
@@ -7256,20 +7256,20 @@ def q255_quantile_rolling_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Documents-domain instance: n_chars in width-16 buckets over
 # [0, 65536) characters.
-_QSK_DOC_W = 16
-_QSK_DOC_NBKT = 4096
+QSK_DOC_W = 16
+QSK_DOC_NBKT = 4096
 _QSK_DOC_PCTS = (10, 50, 95)
 
 
 def _length_cutoff_oracle() -> str:
-    bkt = _qsk_bucket_sql("n_chars", _QSK_DOC_W, _QSK_DOC_NBKT)
+    bkt = qsk_bucket_sql("n_chars", QSK_DOC_W, QSK_DOC_NBKT)
     return f"""
     WITH hist AS (
       SELECT lang, {bkt} AS bkt, CAST(COUNT(*) AS BIGINT) AS c
       FROM documents GROUP BY 1, 2
     ),
     est AS (
-      {_qsk_est_sql("hist", "lang", _QSK_DOC_W, _QSK_DOC_PCTS, True)}
+      {qsk_est_sql("hist", "lang", QSK_DOC_W, _QSK_DOC_PCTS, True)}
     ),
     dropped AS (
       SELECT d.lang,
@@ -7309,12 +7309,12 @@ def q258_length_cutoff_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     phases composed, value-checked end-to-end.
 
     Exactness: cells, ranks, and midpoints are the shared
-    `_qsk_estimates` readout (deterministic integers); the pricing
+    `qsk_estimates` readout (deterministic integers); the pricing
     side counts and sums integers over an identical surviving set in
     both engines; one truncated ppm division.
 
     Scale: one documents pass to the per-(lang, bucket) histogram
-    (map-side combine), readouts on <= {_QSK_DOC_NBKT} cells per
+    (map-side combine), readouts on <= {QSK_DOC_NBKT} cells per
     language, then one filter pass with the broadcast cutoffs. No
     per-group value materialization anywhere — the term q99-style
     exact percentiles would pay.
@@ -7324,10 +7324,10 @@ def q258_length_cutoff_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("lang", "n_chars")
     hist = docs.groupBy(
         "lang",
-        _qsk_bucket_expr("n_chars", _QSK_DOC_W, _QSK_DOC_NBKT).alias("bkt"),
+        qsk_bucket_expr("n_chars", QSK_DOC_W, QSK_DOC_NBKT).alias("bkt"),
     ).agg(F.count(F.lit(1)).alias("c"))
-    est = _qsk_estimates(
-        hist, ["lang"], _QSK_DOC_W, _QSK_DOC_PCTS, with_counts=True
+    est = qsk_estimates(
+        hist, ["lang"], QSK_DOC_W, _QSK_DOC_PCTS, with_counts=True
     ).drop("n_buckets")
     dropped = (
         docs.join(F.broadcast(est.select("lang", "est_p95")), "lang")
@@ -7365,7 +7365,7 @@ _RPP_PARTS = 8  # target partition count for the planned range shuffle
 
 
 def _rpp_oracle() -> str:
-    bkt = _qsk_bucket_sql("l_extendedprice", _QSK_W, _QSK_NBKT)
+    bkt = qsk_bucket_sql("l_extendedprice", QSK_W, QSK_NBKT)
     return f"""
     WITH v AS (SELECT {bkt} AS bkt FROM lineitem),
     hist AS (
@@ -7386,7 +7386,7 @@ def _rpp_oracle() -> str:
     SELECT partition_id,
            CAST(MIN(bkt) AS BIGINT) AS lo_bkt,
            CAST(MAX(bkt) AS BIGINT) AS hi_bkt,
-           CAST(MIN(bkt) * {_QSK_W} AS BIGINT) AS lo_value,
+           CAST(MIN(bkt) * {QSK_W} AS BIGINT) AS lo_value,
            CAST(SUM(c) AS BIGINT) AS part_rows,
            CAST(MAX(n) // {_RPP_PARTS} AS BIGINT) AS ideal_rows,
            CAST((SUM(c) - MAX(n) // {_RPP_PARTS}) * 1000000
@@ -7413,7 +7413,7 @@ def q266_range_partition_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     RangePartitioner does with a private per-run sample, done instead
     from DETERMINISTIC, MERGEABLE sketch state: 1000 executors
     histogram their slices (cell addition, q254's law), the planner
-    walks <= {_QSK_NBKT} integers, and the boundaries are
+    walks <= {QSK_NBKT} integers, and the boundaries are
     bit-reproducible across runs — so a nightly re-sort reuses
     yesterday's boundaries and bucketed outputs stay stable.
 
@@ -7422,16 +7422,16 @@ def q266_range_partition_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     because assignment is bucket-granular by construction.
 
     Scale: one corpus pass builds the histogram (map-side combine to
-    <= {_QSK_NBKT} cells); everything after — walk, assignment,
+    <= {QSK_NBKT} cells); everything after — walk, assignment,
     pricing — runs on the sketch frame. The planned boundaries then
     feed repartitionByRange, NOT a second sampling scan. The
     single-partition window here orders the histogram frame
-    (<= {_QSK_NBKT} rows), never the corpus.
+    (<= {QSK_NBKT} rows), never the corpus.
 
     Cites reference behavior: none (beyond-reference operator).
     """
     li = load_table(spark, sf_dir, "lineitem").select(
-        _qsk_bucket_expr("l_extendedprice", _QSK_W, _QSK_NBKT).alias("bkt")
+        qsk_bucket_expr("l_extendedprice", QSK_W, QSK_NBKT).alias("bkt")
     )
     hist = li.groupBy("bkt").agg(F.count(F.lit(1)).cast("long").alias("c"))
     w_cum = Window.orderBy("bkt").rowsBetween(
@@ -7457,7 +7457,7 @@ def q266_range_partition_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     return assigned.groupBy("partition_id").agg(
         F.min("bkt").cast("long").alias("lo_bkt"),
         F.max("bkt").cast("long").alias("hi_bkt"),
-        (F.min("bkt") * _QSK_W).cast("long").alias("lo_value"),
+        (F.min("bkt") * QSK_W).cast("long").alias("lo_value"),
         F.sum("c").cast("long").alias("part_rows"),
         ideal.cast("long").alias("ideal_rows"),
         F.expr(
@@ -7636,7 +7636,7 @@ _LDA_RECUT_PPM = 200_000  # re-cut a range when |skew| exceeds 20%
 
 
 def _layout_drift_oracle() -> str:
-    bkt = _qsk_bucket_sql("l_extendedprice", _QSK_W, _QSK_NBKT)
+    bkt = qsk_bucket_sql("l_extendedprice", QSK_W, QSK_NBKT)
     p = _RPP_PARTS
     return f"""
     WITH v AS MATERIALIZED (
@@ -7705,7 +7705,7 @@ def q275_layout_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: ONE corpus pass builds the bucket/date frame; both
     histograms, the walk, the cut frame, and the assignment run on
-    <= {_QSK_NBKT} cells (the cuts frame is <= {_RPP_PARTS - 1} rows
+    <= {QSK_NBKT} cells (the cuts frame is <= {_RPP_PARTS - 1} rows
     and broadcast); nothing after the scan is corpus-sized. In
     production the two histograms come from stored daily partials
     (q254's merge law) — no scan at all.
@@ -7713,13 +7713,13 @@ def q275_layout_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cites reference behavior: none (beyond-reference operator).
     """
     v = load_table(spark, sf_dir, "lineitem").select(
-        _qsk_bucket_expr("l_extendedprice", _QSK_W, _QSK_NBKT).alias("bkt"),
+        qsk_bucket_expr("l_extendedprice", QSK_W, QSK_NBKT).alias("bkt"),
         "l_shipdate",
     )
     # ONE fused aggregation builds BOTH histograms (conditional count
     # for the pre-cutoff slice beside the full count) — one corpus
     # pass, one map-side-combined exchange, and the result frame is
-    # <= _QSK_NBKT rows, so no checkpoint of corpus-sized data is
+    # <= QSK_NBKT rows, so no checkpoint of corpus-sized data is
     # ever materialized (a localCheckpoint here cost 16x at the 100x
     # sweep: writing the bucket/date frame dominated the histograms)
     hist2 = v.groupBy("bkt").agg(

@@ -2924,14 +2924,14 @@ _CARD_PCTS = (50, 95)
 
 def _dataset_card_oracle() -> str:
     from target_hdfs_spark.operators.analytics import (
-        _QSK_DOC_NBKT,
-        _QSK_DOC_W,
-        _qsk_bucket_sql,
-        _qsk_est_sql,
+        QSK_DOC_NBKT,
+        QSK_DOC_W,
+        qsk_bucket_sql,
+        qsk_est_sql,
     )
 
     tok = TOKENS_SQL.format(expr="text")
-    bkt = _qsk_bucket_sql("n_chars", _QSK_DOC_W, _QSK_DOC_NBKT)
+    bkt = qsk_bucket_sql("n_chars", QSK_DOC_W, QSK_DOC_NBKT)
     return f"""
     WITH base AS MATERIALIZED (
       SELECT source, lang, n_chars,
@@ -2964,7 +2964,7 @@ def _dataset_card_oracle() -> str:
       FROM base GROUP BY 1, 2
     ),
     est AS (
-      {_qsk_est_sql("hist", "source", _QSK_DOC_W, _CARD_PCTS)}
+      {qsk_est_sql("hist", "source", QSK_DOC_W, _CARD_PCTS)}
     )
     SELECT a.source, a.n_docs, a.total_chars, a.total_tokens, a.n_langs,
            t.top_lang,
@@ -2998,7 +2998,7 @@ def q268_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     and what a curator diffs release-over-release.
 
     Exactness: counts, sums, distinct counts, integer-ppm divisions,
-    and the shared `_qsk_estimates` readout — all deterministic
+    and the shared `qsk_estimates` readout — all deterministic
     integers; the dominant language tie-breaks alphabetically.
 
     Scale: ONE documents pass computes hash + token count + bucket
@@ -3012,10 +3012,10 @@ def q268_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cites reference behavior: none (beyond-reference operator).
     """
     from target_hdfs_spark.operators.analytics import (
-        _QSK_DOC_NBKT,
-        _QSK_DOC_W,
-        _qsk_bucket_expr,
-        _qsk_estimates,
+        QSK_DOC_NBKT,
+        QSK_DOC_W,
+        qsk_bucket_expr,
+        qsk_estimates,
     )
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -3027,7 +3027,7 @@ def q268_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_chars",
         F.size(tokens(F.col("text"))).cast("long").alias("n_toks"),
         md5_hash32(F.col("text")).alias("th"),
-        _qsk_bucket_expr("n_chars", _QSK_DOC_W, _QSK_DOC_NBKT).alias("bkt"),
+        qsk_bucket_expr("n_chars", QSK_DOC_W, QSK_DOC_NBKT).alias("bkt"),
     ).localCheckpoint()  # one corpus pass feeds all three rollups
     agg = base.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -3050,7 +3050,7 @@ def q268_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist = base.groupBy("source", "bkt").agg(
         F.count(F.lit(1)).cast("long").alias("c")
     )
-    est = _qsk_estimates(hist, ["source"], _QSK_DOC_W, _CARD_PCTS)
+    est = qsk_estimates(hist, ["source"], QSK_DOC_W, _CARD_PCTS)
     return (
         agg.join(top.withColumnRenamed("c", "top_c"), "source")
         .join(est, "source")
@@ -3375,13 +3375,13 @@ def q270_span_surgery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _release_funnel_oracle() -> str:
     from target_hdfs_spark.operators.analytics import (
-        _QSK_DOC_NBKT,
-        _QSK_DOC_W,
-        _qsk_bucket_sql,
-        _qsk_est_sql,
+        QSK_DOC_NBKT,
+        QSK_DOC_W,
+        qsk_bucket_sql,
+        qsk_est_sql,
     )
 
-    bkt = _qsk_bucket_sql("n_chars", _QSK_DOC_W, _QSK_DOC_NBKT)
+    bkt = qsk_bucket_sql("n_chars", QSK_DOC_W, QSK_DOC_NBKT)
     u = md5_hash32_sql("'smp|' || CAST(doc_id AS VARCHAR)")
     return f"""
     WITH base AS MATERIALIZED (
@@ -3415,7 +3415,7 @@ def _release_funnel_oracle() -> str:
       FROM dec GROUP BY 1, 2
     ),
     cut AS (
-      {_qsk_est_sql("hist", "lang", _QSK_DOC_W, (95,))}
+      {qsk_est_sql("hist", "lang", QSK_DOC_W, (95,))}
     ),
     len_ok AS MATERIALIZED (
       SELECT d.doc_id, d.lang, d.n_chars
@@ -3520,10 +3520,10 @@ def q271_release_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cites reference behavior: none (beyond-reference operator).
     """
     from target_hdfs_spark.operators.analytics import (
-        _QSK_DOC_NBKT,
-        _QSK_DOC_W,
-        _qsk_bucket_expr,
-        _qsk_estimates,
+        QSK_DOC_NBKT,
+        QSK_DOC_W,
+        qsk_bucket_expr,
+        qsk_estimates,
     )
 
     base = fan_out(
@@ -3560,9 +3560,9 @@ def q271_release_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "n_chars"
     ).localCheckpoint()
     hist = dec.groupBy(
-        "lang", _qsk_bucket_expr("n_chars", _QSK_DOC_W, _QSK_DOC_NBKT).alias("bkt")
+        "lang", qsk_bucket_expr("n_chars", QSK_DOC_W, QSK_DOC_NBKT).alias("bkt")
     ).agg(F.count(F.lit(1)).cast("long").alias("c"))
-    cut = _qsk_estimates(hist, ["lang"], _QSK_DOC_W, (95,))
+    cut = qsk_estimates(hist, ["lang"], QSK_DOC_W, (95,))
     len_ok = dec.join(F.broadcast(cut), "lang").filter(
         F.col("n_chars") <= F.col("est_p95")
     ).select("doc_id", "lang", "n_chars").localCheckpoint()
@@ -4025,15 +4025,15 @@ def q284_score_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Hashed feature buckets (Xie et al. 2023 use 10k; the model is B rows
 # regardless of corpus size — metadata scale, broadcast back to score).
-_DSIR_B = 1024
+DSIR_B = 1024
 # Target-domain slice the selection steers toward: the '{lang}' docs
 # stand in for the high-quality target corpus.
-_DSIR_TGT_LANG = "en"
+DSIR_TGT_LANG = "en"
 
 
 def _dsir_gram_frame(d: DataFrame) -> DataFrame:
     """(doc_id, lang, source, n_toks, bucket) — one row per word-BIGRAM
-    occurrence, bucket = portable md5 hash of the gram mod {_DSIR_B}.
+    occurrence, bucket = portable md5 hash of the gram mod {DSIR_B}.
     Shared by the model-fit pass and the scoring pass."""
     return d.select(
         "doc_id",
@@ -4046,7 +4046,7 @@ def _dsir_gram_frame(d: DataFrame) -> DataFrame:
         "lang",
         "source",
         "n_toks",
-        (md5_hash32("gram") % _DSIR_B).alias("bucket"),
+        (md5_hash32("gram") % DSIR_B).alias("bucket"),
     )
 
 
@@ -4060,22 +4060,22 @@ _DSIR_SCORES_SQL = f"""
     ),
     gb AS (
       SELECT doc_id, lang, source, len(toks) AS n_toks,
-             {md5_hash32_sql('gram')} % {_DSIR_B} AS bucket
+             {md5_hash32_sql('gram')} % {DSIR_B} AS bucket
       FROM (SELECT doc_id, lang, source, toks,
                    unnest({shingles_sql('toks', 2)}) AS gram FROM d)
     ),
     model AS (
       SELECT bucket,
              CAST(COUNT(*) AS HUGEINT) AS cnt_r,
-             CAST(SUM(CASE WHEN lang = '{_DSIR_TGT_LANG}' THEN 1 ELSE 0 END)
+             CAST(SUM(CASE WHEN lang = '{DSIR_TGT_LANG}' THEN 1 ELSE 0 END)
                   AS HUGEINT) AS cnt_t
       FROM gb GROUP BY bucket
     ),
     tot AS (SELECT SUM(cnt_r) AS tot_r, SUM(cnt_t) AS tot_t FROM model),
     ratio AS (
       SELECT bucket,
-             CAST((cnt_t + 1) * (tot_r + {_DSIR_B}) * 1000000
-                  // ((cnt_r + 1) * (tot_t + {_DSIR_B})) AS BIGINT) AS r_ppm
+             CAST((cnt_t + 1) * (tot_r + {DSIR_B}) * 1000000
+                  // ((cnt_r + 1) * (tot_t + {DSIR_B})) AS BIGINT) AS r_ppm
       FROM model, tot
     ),
     scores AS (
@@ -4103,7 +4103,7 @@ def dsir_doc_scores(
     once for the whole composition instead of once per stage.
 
     Plan: one lazily checkpointed token frame feeds both gram passes;
-    the {_DSIR_B}-row model and the 1-row totals are broadcast; the
+    the {DSIR_B}-row model and the 1-row totals are broadcast; the
     per-doc aggregation is the only corpus-sized shuffle."""
     if d is None:
         d = (
@@ -4124,7 +4124,7 @@ def dsir_doc_scores(
     model = gb.groupBy("bucket").agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("cnt_r"),
         F.sum(
-            F.when(F.col("lang") == _DSIR_TGT_LANG, 1).otherwise(0)
+            F.when(F.col("lang") == DSIR_TGT_LANG, 1).otherwise(0)
         ).cast("decimal(38,0)").alias("cnt_t"),
     )
     tot = model.agg(
@@ -4133,8 +4133,8 @@ def dsir_doc_scores(
     ratio = model.crossJoin(F.broadcast(tot)).select(
         "bucket",
         F.expr(
-            f"CAST((cnt_t + 1) * (tot_r + {_DSIR_B}) * 1000000"
-            f" div ((cnt_r + 1) * (tot_t + {_DSIR_B})) AS BIGINT)"
+            f"CAST((cnt_t + 1) * (tot_r + {DSIR_B}) * 1000000"
+            f" div ((cnt_r + 1) * (tot_t + {DSIR_B})) AS BIGINT)"
         ).alias("r_ppm"),
     )
     return (
@@ -4176,8 +4176,8 @@ def dsir_doc_scores(
 def q290_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR importance weights (Xie et al., NeurIPS 2023) with the
     log-likelihood ratio made ENGINE-EXACT: features are hashed word
-    bigrams ({_DSIR_B} buckets, portable md5); the bag-of-grams target
-    model is fit on the '{_DSIR_TGT_LANG}' slice, the raw model on the
+    bigrams ({DSIR_B} buckets, portable md5); the bag-of-grams target
+    model is fit on the '{DSIR_TGT_LANG}' slice, the raw model on the
     whole corpus; each bucket's add-1-smoothed target/raw probability
     ratio is an INTEGER ppm (cross-multiplied — no log, no float sum,
     so Spark and the oracle agree bit-for-bit); a document's
@@ -4187,7 +4187,7 @@ def q290_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-weighting run reads: doc counts, mean score, selected share,
     and the token mass the selection keeps.
 
-    Scale: the model is a {_DSIR_B}-row map-side-combined aggregation
+    Scale: the model is a {DSIR_B}-row map-side-combined aggregation
     (never corpus-sized); the 1-row totals and the ratio table are
     broadcast, so scoring is one map-side join plus one |docs|-sized
     partial-agg shuffle; the result is |sources| rows. At 100 TB the
@@ -4757,17 +4757,17 @@ def _dsir_half_model_sql(parity: int) -> str:
     """The ratio CTE body fit on the doc_id-parity half (DuckDB)."""
     return f"""
       SELECT bucket,
-             CAST((cnt_t + 1) * (tot_r + {_DSIR_B}) * 1000000
-                  // ((cnt_r + 1) * (tot_t + {_DSIR_B})) AS BIGINT) AS r_ppm
+             CAST((cnt_t + 1) * (tot_r + {DSIR_B}) * 1000000
+                  // ((cnt_r + 1) * (tot_t + {DSIR_B})) AS BIGINT) AS r_ppm
       FROM (
         SELECT bucket,
                CAST(COUNT(*) AS HUGEINT) AS cnt_r,
-               CAST(SUM(CASE WHEN lang = '{_DSIR_TGT_LANG}' THEN 1 ELSE 0
+               CAST(SUM(CASE WHEN lang = '{DSIR_TGT_LANG}' THEN 1 ELSE 0
                    END) AS HUGEINT) AS cnt_t
         FROM gb WHERE doc_id % 2 = {parity} GROUP BY bucket
       ) m, (
         SELECT CAST(COUNT(*) AS HUGEINT) AS tot_r,
-               CAST(SUM(CASE WHEN lang = '{_DSIR_TGT_LANG}' THEN 1 ELSE 0
+               CAST(SUM(CASE WHEN lang = '{DSIR_TGT_LANG}' THEN 1 ELSE 0
                    END) AS HUGEINT) AS tot_t
         FROM gb WHERE doc_id % 2 = {parity}
       ) t
@@ -4782,7 +4782,7 @@ def _dsir_half_model_sql(parity: int) -> str:
       FROM documents WHERE len({_TOK}) > 0
     ),
     gb AS (
-      SELECT doc_id, lang, {md5_hash32_sql('gram')} % {_DSIR_B} AS bucket
+      SELECT doc_id, lang, {md5_hash32_sql('gram')} % {DSIR_B} AS bucket
       FROM (SELECT doc_id, lang, toks,
                    unnest({shingles_sql('toks', 2)}) AS gram FROM d)
     ),
@@ -4811,11 +4811,11 @@ def q296_dsir_model_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiebreak on bucket id.
 
     Scale: ONE gram pass collapses straight into ONE map-side-combined
-    (parity, bucket) aggregation (<= 2x{_DSIR_B} rows, eagerly
+    (parity, bucket) aggregation (<= 2x{DSIR_B} rows, eagerly
     checkpointed); each half-model is a filter of that frame and its
     totals are column sums of the SAME rows (a corpus-sized gram
     frame is never read twice, let alone four times); the join and
-    the top-k run on {_DSIR_B}-row frames (TakeOrderedAndProject,
+    the top-k run on {DSIR_B}-row frames (TakeOrderedAndProject,
     never a global sort)."""
     d = (
         fan_out(
@@ -4834,17 +4834,17 @@ def q296_dsir_model_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         (F.col("doc_id") % 2).alias("parity"),
         "lang",
-        (md5_hash32("gram") % _DSIR_B).alias("bucket"),
+        (md5_hash32("gram") % DSIR_B).alias("bucket"),
     )
     mc = (
         gb.groupBy("parity", "bucket")
         .agg(
             F.count(F.lit(1)).cast("decimal(38,0)").alias("cnt_r"),
             F.sum(
-                F.when(F.col("lang") == _DSIR_TGT_LANG, 1).otherwise(0)
+                F.when(F.col("lang") == DSIR_TGT_LANG, 1).otherwise(0)
             ).cast("decimal(38,0)").alias("cnt_t"),
         )
-        .localCheckpoint(eager=True)  # <= 2x{_DSIR_B} rows
+        .localCheckpoint(eager=True)  # <= 2x{DSIR_B} rows
     )
 
     def half_ratio(parity: int, out: str) -> DataFrame:
@@ -4856,8 +4856,8 @@ def q296_dsir_model_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         return m.crossJoin(F.broadcast(t)).select(
             "bucket",
             F.expr(
-                f"CAST((cnt_t + 1) * (tot_r + {_DSIR_B}) * 1000000"
-                f" div ((cnt_r + 1) * (tot_t + {_DSIR_B})) AS BIGINT)"
+                f"CAST((cnt_t + 1) * (tot_r + {DSIR_B}) * 1000000"
+                f" div ((cnt_r + 1) * (tot_t + {DSIR_B})) AS BIGINT)"
             ).alias(out),
         )
 

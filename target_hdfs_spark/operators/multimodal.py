@@ -512,7 +512,7 @@ def q94_wav_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _IMG_W = _IMG_H = 16
-_IMG_GROUPS = 50
+IMG_GROUPS = 50
 
 
 def _png_chunk(tag: bytes, data: bytes) -> bytes:
@@ -649,9 +649,9 @@ def dhash64(pixels) -> int:
     return h - (1 << 64) if h >= (1 << 63) else h
 
 
-def _group_pixels(g: int) -> list[list[int]]:
+def group_pixels(g: int) -> list[list[int]]:
     """Deterministic synthetic image for content group g (distinct
-    dHash per group for g < _IMG_GROUPS — pinned by test). Built with
+    dHash per group for g < IMG_GROUPS — pinned by test). Built with
     numpy broadcasting (identical integers to the scalar formula; all
     terms fit int64 comfortably)."""
     import numpy as np
@@ -669,7 +669,7 @@ def _group_pixels(g: int) -> list[list[int]]:
     oracle=f"""
     SELECT MIN(doc_id) AS root_doc_id, COUNT(*) AS n_images
     FROM documents
-    GROUP BY doc_id % {_IMG_GROUPS}
+    GROUP BY doc_id % {IMG_GROUPS}
     ORDER BY root_doc_id
     """,
     tags=("multimodal", "dedup", "phash", "mapInPandas"),
@@ -680,7 +680,7 @@ def q147_image_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     media fixture's ``BinaryType`` column, run the real decoder
     (chunk walk → inflate → unfilter), compute the 64-bit perceptual
     dHash, and exact-dedup on the hash — the image twin of q40's text
-    dedup. Content groups are doc_id % {_IMG_GROUPS}, so the oracle
+    dedup. Content groups are doc_id % {IMG_GROUPS}, so the oracle
     can verify the clustering without computing hashes: distinct
     groups map to distinct dHashes (pinned by tests/test_multimodal.py),
     making hash-group = content-group.
@@ -719,7 +719,7 @@ def q147_image_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # L5f: sample-level PCM audio roundtrip + exact integer features
 # ---------------------------------------------------------------------------
 
-_PCM_N = 256          # samples per clip
+PCM_N = 256          # samples per clip
 _PCM_RATE = 8000
 
 
@@ -736,7 +736,7 @@ def encode_pcm_wav(doc_id: int) -> bytes:
     vectorized inside the Arrow-batched decode/feature passes."""
     import numpy as np
 
-    i = np.arange(_PCM_N, dtype=np.int64)
+    i = np.arange(PCM_N, dtype=np.int64)
     v = (doc_id * 31 + i * 17) % 2048 - 1024
     return encode_wav(1, _PCM_RATE, 16, v.astype("<i2").tobytes())
 
@@ -771,7 +771,7 @@ def decode_pcm_array(blob: bytes):
       SELECT d.doc_id, i.i,
              ((d.doc_id * 31 + i.i * 17) % 2048) - 1024 AS v
       FROM documents d
-      CROSS JOIN (SELECT unnest(generate_series(0, {_PCM_N - 1})) AS i) i
+      CROSS JOIN (SELECT unnest(generate_series(0, {PCM_N - 1})) AS i) i
     )
     SELECT doc_id,
            CAST(COUNT(*) AS BIGINT) AS n_samples,
@@ -832,7 +832,7 @@ def q152_audio_pcm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 # L5g: video container index — real RIFF/AVI chunk walk
 # ---------------------------------------------------------------------------
 
-_AVI_MAX_FRAMES = 8
+AVI_MAX_FRAMES = 8
 
 
 def _frame_len(doc_id: int, k: int) -> int:
@@ -846,7 +846,7 @@ def encode_avi(doc_id: int) -> bytes:
     holding n '00db' (uncompressed video frame) chunks, word-aligned
     per the RIFF spec. Frame k's payload is deterministic filler of
     _frame_len bytes."""
-    n_frames = 1 + doc_id % _AVI_MAX_FRAMES
+    n_frames = 1 + doc_id % AVI_MAX_FRAMES
     chunks = b""
     for k in range(n_frames):
         ln = _frame_len(doc_id, k)
@@ -899,8 +899,8 @@ def decode_avi_index(blob: bytes) -> list[tuple[int, int, int]]:
       SELECT d.doc_id, k.k,
              16 + (d.doc_id * 7 + k.k * 13) % 64 AS n_bytes
       FROM documents d
-      CROSS JOIN (SELECT unnest(generate_series(0, {_AVI_MAX_FRAMES - 1})) AS k) k
-      WHERE k.k < 1 + d.doc_id % {_AVI_MAX_FRAMES}
+      CROSS JOIN (SELECT unnest(generate_series(0, {AVI_MAX_FRAMES - 1})) AS k) k
+      WHERE k.k < 1 + d.doc_id % {AVI_MAX_FRAMES}
     )
     SELECT doc_id,
            CAST(COUNT(*) AS BIGINT) AS n_frames,
@@ -964,8 +964,8 @@ _FRAME_SAMPLE_K = 2  # sample every 2nd frame of the container index
       SELECT d.doc_id, k.k,
              16 + (d.doc_id * 7 + k.k * 13) % 64 AS n_bytes
       FROM documents d
-      CROSS JOIN (SELECT unnest(generate_series(0, {_AVI_MAX_FRAMES - 1})) AS k) k
-      WHERE k.k < 1 + d.doc_id % {_AVI_MAX_FRAMES}
+      CROSS JOIN (SELECT unnest(generate_series(0, {AVI_MAX_FRAMES - 1})) AS k) k
+      WHERE k.k < 1 + d.doc_id % {AVI_MAX_FRAMES}
         AND k.k % {_FRAME_SAMPLE_K} = 0
     ),
     b AS (
@@ -1051,7 +1051,7 @@ _AUDIO_WIN = 64  # samples per feature window (256 samples -> 4 windows)
       SELECT d.doc_id, i.i,
              ((d.doc_id * 31 + i.i * 17) % 2048) - 1024 AS v
       FROM documents d
-      CROSS JOIN (SELECT unnest(generate_series(0, {_PCM_N - 1})) AS i) i
+      CROSS JOIN (SELECT unnest(generate_series(0, {PCM_N - 1})) AS i) i
     ),
     w AS (
       SELECT doc_id, i // {_AUDIO_WIN} AS widx,
@@ -1140,10 +1140,10 @@ _PRUNE_MIN_FRAMES = 5  # decode only containers promising >= this many frames
       SELECT d.doc_id, k.k,
              16 + (d.doc_id * 7 + k.k * 13) % 64 AS n_bytes
       FROM documents d
-      CROSS JOIN (SELECT unnest(generate_series(0, {_AVI_MAX_FRAMES - 1})) AS k) k
+      CROSS JOIN (SELECT unnest(generate_series(0, {AVI_MAX_FRAMES - 1})) AS k) k
       WHERE d.doc_id % 2 = 1
-        AND 1 + d.doc_id % {_AVI_MAX_FRAMES} >= {_PRUNE_MIN_FRAMES}
-        AND k.k < 1 + d.doc_id % {_AVI_MAX_FRAMES}
+        AND 1 + d.doc_id % {AVI_MAX_FRAMES} >= {_PRUNE_MIN_FRAMES}
+        AND k.k < 1 + d.doc_id % {AVI_MAX_FRAMES}
     )
     SELECT doc_id,
            CAST(COUNT(*) AS BIGINT) AS n_frames,
@@ -1255,8 +1255,8 @@ _SCENE_CUT_MIN_DELTA = 1500  # |checksum_k - checksum_{k-1}| >= this = a cut
       SELECT d.doc_id, k.k,
              16 + (d.doc_id * 7 + k.k * 13) % 64 AS n_bytes
       FROM documents d
-      CROSS JOIN (SELECT unnest(generate_series(0, {_AVI_MAX_FRAMES - 1})) AS k) k
-      WHERE k.k < 1 + d.doc_id % {_AVI_MAX_FRAMES}
+      CROSS JOIN (SELECT unnest(generate_series(0, {AVI_MAX_FRAMES - 1})) AS k) k
+      WHERE k.k < 1 + d.doc_id % {AVI_MAX_FRAMES}
     ),
     b AS (
       SELECT f.doc_id, f.k,
@@ -1300,7 +1300,7 @@ def q245_video_scene_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one map-only mapInPandas pass emits (doc_id, frame_idx,
     checksum) int64 rows — payloads never shuffle; the lag runs in a
-    doc-partitioned window over <= {_AVI_MAX_FRAMES} rows per clip
+    doc-partitioned window over <= {AVI_MAX_FRAMES} rows per clip
     (bounded frames per partition key; a long-video corpus would key
     the window by (clip, minute) exactly like q173's segmented scan);
     the profile aggregation combines map-side.

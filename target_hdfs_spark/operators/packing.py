@@ -36,10 +36,10 @@ from target_hdfs_spark.functions.textfuncs import tokens
 from target_hdfs_spark.registry import query
 from target_hdfs_spark.sources.readers import fan_out, load_table
 
-_PK_SALT = "pack|"  # order-key salt: the training-order hash rule
+PK_SALT = "pack|"  # order-key salt: the training-order hash rule
 _PK_BUCKETS = 64  # prefix-sum fan-out (any power of two; grows with cluster)
-_PK_BKT_W = (1 << 32) // _PK_BUCKETS  # md5_hash32 < 2^32 -> bucket 0..63
-_PK_CTX = 2048  # training context length (tokens) for q278
+PK_BKT_W = (1 << 32) // _PK_BUCKETS  # md5_hash32 < 2^32 -> bucket 0..63
+PK_CTX = 2048  # training context length (tokens) for q278
 _PK_CTXS = (512, 2048, 8192)  # q279's sensitivity grid
 _SHUF_WINDOWS = 16  # q280: equal token-mass slices of the training order
 
@@ -53,7 +53,7 @@ def packed_token_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ord_h, doc_id) — computed as a distributed prefix sum, never a
     single global window task.
 
-    The bucket id `ord_h div {_PK_BKT_W}` is monotone in ord_h, so
+    The bucket id `ord_h div {PK_BKT_W}` is monotone in ord_h, so
     concatenating buckets in id order reproduces the global order:
     cum_before = (tokens in earlier buckets) + (tokens earlier within
     this bucket). The offset frame is {_PK_BUCKETS} rows — metadata
@@ -66,11 +66,11 @@ def packed_token_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             F.size(tokens("text")).cast("long").alias("n_toks"),
             md5_hash32(
-                F.concat(F.lit(_PK_SALT), F.col("doc_id").cast("string"))
+                F.concat(F.lit(PK_SALT), F.col("doc_id").cast("string"))
             ).alias("ord_h"),
         )
         .filter(F.col("n_toks") > 0)
-        .withColumn("bkt", F.expr(f"ord_h div {_PK_BKT_W}"))
+        .withColumn("bkt", F.expr(f"ord_h div {PK_BKT_W}"))
     )
     w_in = Window.partitionBy("bkt").orderBy("ord_h", "doc_id")
     within = base.withColumn(
@@ -127,8 +127,8 @@ _PACK_CUM_SQL = f"""t AS (
     oracle=f"""
     WITH {_PACK_CUM_SQL},
     spans AS (
-      SELECT CAST(cum_before // {_PK_CTX} AS BIGINT) AS fc,
-             CAST((cum_before + n_toks - 1) // {_PK_CTX} AS BIGINT) AS lc
+      SELECT CAST(cum_before // {PK_CTX} AS BIGINT) AS fc,
+             CAST((cum_before + n_toks - 1) // {PK_CTX} AS BIGINT) AS lc
       FROM c
     ),
     pairs AS (
@@ -149,7 +149,7 @@ _PACK_CUM_SQL = f"""t AS (
 def q278_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SEQUENCE PACKING (concat-and-chunk, the GPT-style final
     transform): documents are concatenated in the deterministic
-    salted-hash training order and split into fixed {_PK_CTX}-token
+    salted-hash training order and split into fixed {PK_CTX}-token
     contexts; the profile reports how many documents each chunk
     touches (docs_in_chunk histogram) — the attention-mask /
     cross-contamination readout a training team checks before a run
@@ -173,8 +173,8 @@ def q278_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     f = packed_token_frame(spark, sf_dir)
     spans = f.select(
-        F.expr(f"cum_before div {_PK_CTX}").alias("fc"),
-        F.expr(f"(cum_before + n_toks - 1) div {_PK_CTX}").alias("lc"),
+        F.expr(f"cum_before div {PK_CTX}").alias("fc"),
+        F.expr(f"(cum_before + n_toks - 1) div {PK_CTX}").alias("lc"),
     )
     pairs = spans.select(
         F.explode(F.sequence("fc", "lc")).alias("chunk_id")
@@ -230,7 +230,7 @@ def q278_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q279_packing_ctx_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PACKING CONTEXT-LENGTH CURVE — the knob table behind q278's
-    fixed {_PK_CTX}: for each candidate context length
+    fixed {PK_CTX}: for each candidate context length
     {list(_PK_CTXS)}, the chunk count, how many documents straddle a
     chunk boundary (cross_docs — each straddle is either a truncation
     or an attention-mask seam), the tail padding the last chunk wastes,
@@ -518,11 +518,11 @@ def q285_curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (pad-to-bucket instead of concat-and-chunk), priced against packing
 # ---------------------------------------------------------------------------
 
-_LBB_CAP = _PK_CTX  # max sequence length (docs truncate here)
-_LBB_BUCKETS = tuple(1 << j for j in range(_LBB_CAP.bit_length()))
+LBB_CAP = PK_CTX  # max sequence length (docs truncate here)
+_LBB_BUCKETS = tuple(1 << j for j in range(LBB_CAP.bit_length()))
 
 
-def _bucket_case_sql(col: str) -> str:
+def bucket_case_sql(col: str) -> str:
     """Smallest power-of-two >= `col` as a CASE chain — pure integer
     comparisons, shared verbatim by the Spark plan and the DuckDB
     oracle (no log2 float boundaries)."""
@@ -536,13 +536,13 @@ def _bucket_case_sql(col: str) -> str:
     "q286_length_bucketed_batching",
     oracle=f"""
     WITH d AS (
-      SELECT least({_DOC_TOKS_SQL}, {_LBB_CAP}) AS eff,
+      SELECT least({_DOC_TOKS_SQL}, {LBB_CAP}) AS eff,
              {_DOC_TOKS_SQL} AS n_toks
       FROM documents
       WHERE {_DOC_TOKS_SQL} > 0
     ),
     b AS (
-      SELECT eff, n_toks, {_bucket_case_sql('eff')} AS bucket_len FROM d
+      SELECT eff, n_toks, {bucket_case_sql('eff')} AS bucket_len FROM d
     )
     SELECT CAST(bucket_len AS BIGINT) AS bucket_len,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -551,8 +551,8 @@ def _bucket_case_sql(col: str) -> str:
            CAST((COUNT(*) * bucket_len - SUM(eff)) * 1000000
                 // (COUNT(*) * bucket_len) AS BIGINT) AS waste_ppm,
            CAST(SUM(n_toks - eff) AS BIGINT) AS truncated_tokens,
-           CAST((COUNT(*) + ({_LBB_CAP} // bucket_len) - 1)
-                // ({_LBB_CAP} // bucket_len) AS BIGINT) AS n_batches
+           CAST((COUNT(*) + ({LBB_CAP} // bucket_len) - 1)
+                // ({LBB_CAP} // bucket_len) AS BIGINT) AS n_batches
     FROM b GROUP BY bucket_len
     """,
     tags=("packing", "curation", "batching"),
@@ -560,8 +560,8 @@ def _bucket_case_sql(col: str) -> str:
 def q286_length_bucketed_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LENGTH-BUCKETED BATCHING priced per bucket — the padding-based
     alternative to q278's concat-and-chunk packing: each document is
-    truncated to the {_LBB_CAP}-token cap, padded up to the smallest
-    power-of-two bucket, and batched with {_LBB_CAP}//bucket_len
+    truncated to the {LBB_CAP}-token cap, padded up to the smallest
+    power-of-two bucket, and batched with {LBB_CAP}//bucket_len
     peers. Per bucket: docs, real vs padded tokens, exact padding
     waste (ppm), truncation loss, and batch count — next to q279's
     tail-padding numbers this is the packing-vs-padding decision
@@ -583,11 +583,11 @@ def q286_length_bucketed_batching(spark: SparkSession, sf_dir: str) -> DataFrame
         .select(toks.alias("n_toks"))
         .filter(F.col("n_toks") > 0)
         .select(
-            "n_toks", F.least(F.col("n_toks"), F.lit(_LBB_CAP)).alias("eff")
+            "n_toks", F.least(F.col("n_toks"), F.lit(LBB_CAP)).alias("eff")
         )
-        .withColumn("bucket_len", F.expr(_bucket_case_sql("eff")))
+        .withColumn("bucket_len", F.expr(bucket_case_sql("eff")))
     )
-    cap_div = f"({_LBB_CAP} div bucket_len)"
+    cap_div = f"({LBB_CAP} div bucket_len)"
     return (
         d.groupBy("bucket_len")
         .agg(
@@ -827,7 +827,7 @@ def q288_pack_invalidation(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             F.size(tokens("text")).cast("long").alias("n_toks"),
             md5_hash32(
-                F.concat(F.lit(_PK_SALT), F.col("doc_id").cast("string"))
+                F.concat(F.lit(PK_SALT), F.col("doc_id").cast("string"))
             ).alias("ord_h"),
         )
         .filter(F.col("n_toks") > 0)

@@ -34,11 +34,13 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
+from target_hdfs_spark import storage
+from target_hdfs_spark.plans.upsert import recover_dataset
 from target_hdfs_spark.plans.writer import (
     BLOCK_FILL_FACTOR,
     SchemaChangedError,
-    _normalize,
     get_block_size,
+    normalize,
 )
 
 
@@ -58,13 +60,6 @@ class CompactionReport:
     bytes_compacted: int
 
 
-def _fs(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(hconf), jpath, jvm
-
-
 MANIFEST_NAME = "_compact_manifest.json"
 
 
@@ -81,9 +76,7 @@ def _write_manifest(fs, jvm, directory: str, input_names: list[str]) -> None:
         f"{directory.rstrip('/')}/{MANIFEST_NAME}.tmp"
     )
     dst = _manifest_path(jvm, directory)
-    out = fs.create(tmp, True)
-    out.write(bytearray(json.dumps({"inputs": input_names}).encode("utf-8")))
-    out.close()
+    storage.write_text(fs, tmp, json.dumps({"inputs": input_names}))
     if fs.exists(dst):
         fs.delete(dst, False)
     if not fs.rename(tmp, dst):
@@ -117,10 +110,7 @@ def _recover_interrupted_compaction(fs, jvm, directory: str) -> None:
     man = _manifest_path(jvm, directory)
     if not fs.exists(man):
         return
-    stream = fs.open(man)
-    body = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    stream.close()
-    inputs = json.loads(body)["inputs"]
+    inputs = json.loads(storage.read_text(fs, jvm, man))["inputs"]
     tmp_path = jvm.org.apache.hadoop.fs.Path(directory.rstrip("/") + "/_compact_tmp")
     if fs.exists(tmp_path):
         _move_tmp_files_in(fs, jvm, tmp_path, directory)
@@ -140,7 +130,8 @@ def list_data_files(
     when the directory is missing (reference:
     target_hdfs/utils/hdfs.py:76-82)."""
     suffix = f".{fmt}"
-    fs, jpath, _ = _fs(spark, directory)
+    fs, jvm = storage.filesystem(spark, directory)
+    jpath = jvm.org.apache.hadoop.fs.Path(directory)
     if not fs.exists(jpath):
         return []
     out = []
@@ -168,7 +159,8 @@ def list_partition_dirs(spark: SparkSession, directory: str) -> list[str]:
     (`year=2024/month=1/...`) and returns the directories that
     actually hold data files; a single-level listing would make the
     repair job a silent no-op for multi-column partitioning."""
-    fs, jpath, jvm = _fs(spark, directory)
+    fs, jvm = storage.filesystem(spark, directory)
+    jpath = jvm.org.apache.hadoop.fs.Path(directory)
     if not fs.exists(jpath):
         return []
     leaves: list[str] = []
@@ -206,7 +198,7 @@ def compact_directory(
     silently changes the codec of a dataset.
     """
     limit = size_limit or int(get_block_size(spark) * BLOCK_FILL_FACTOR)
-    fs, _, jvm = _fs(spark, directory)
+    fs, jvm = storage.filesystem(spark, directory)
     if fs.exists(jvm.org.apache.hadoop.fs.Path(directory)):
         _recover_interrupted_compaction(fs, jvm, directory)
     files = list_data_files(spark, directory, fmt)
@@ -224,12 +216,12 @@ def compact_directory(
         .format(fmt)
         .load([f.path for f in small])
     )
-    if expected_schema is not None and _normalize(small_df.schema) != _normalize(
+    if expected_schema is not None and normalize(small_df.schema) != normalize(
         expected_schema
     ):
         raise SchemaChangedError(
             f"compaction schema drift at {directory}: "
-            f"{_normalize(small_df.schema)} != {_normalize(expected_schema)}"
+            f"{normalize(small_df.schema)} != {normalize(expected_schema)}"
         )
 
     # tmp dir INSIDE the directory with a leading underscore: Spark and
@@ -297,7 +289,12 @@ def compact_stream(
     reference disables append mode entirely for partition_cols,
     reference: target_hdfs/sinks.py:38 — compacting within each
     partition directory is the generalization that keeps its
-    invariant: files never move across partition boundaries)."""
+    invariant: files never move across partition boundaries).
+
+    Entry recovery first (`upsert.recover_dataset`): a partition swap
+    stranded at `<col>=<v>__old` would otherwise be listed, and
+    compacted, as a partition of its own."""
+    recover_dataset(spark, stream_dir, partitioned=partitioned)
     dirs = list_partition_dirs(spark, stream_dir) if partitioned else [stream_dir]
     return [
         compact_directory(spark, d, size_limit, compression=compression, fmt=fmt)

@@ -41,9 +41,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from target_hdfs_spark import storage
 from target_hdfs_spark.functions.textfuncs import tokens
 from target_hdfs_spark.operators.packing import (
-    _PK_CTX,
+    PK_CTX,
     packed_token_frame,
 )
 from target_hdfs_spark.sources.readers import load_table
@@ -52,7 +53,7 @@ CHUNKS_PER_BAND = 1024  # hive-partition granularity of the output
 
 
 def packed_chunks(
-    spark: SparkSession, sf_dir: str, ctx: int = _PK_CTX
+    spark: SparkSession, sf_dir: str, ctx: int = PK_CTX
 ) -> DataFrame:
     """(chunk_id, n_tokens, n_docs, tokens array<string>) — every
     fixed-`ctx` training chunk, tokens in exact training order. The
@@ -112,13 +113,7 @@ def read_band(spark: SparkSession, out_dir: str, band_id: int) -> DataFrame:
     interrupted — the remediation is to rerun `write_packed_dataset`
     (mode=overwrite replaces any partial output; reruns are
     byte-identical by construction)."""
-    from target_hdfs_spark.plans.compaction import _fs
-
-    fs, _, jvm = _fs(spark, out_dir)
-    marker = jvm.org.apache.hadoop.fs.Path(
-        f"{out_dir.rstrip('/')}/_SUCCESS"
-    )
-    if not fs.exists(marker):
+    if not storage.is_committed(spark, out_dir):
         raise IncompletePackError(
             f"packed dataset at {out_dir} has no _SUCCESS marker — the "
             "write was interrupted before commit; rerun "
@@ -134,7 +129,7 @@ def write_packed_dataset(
     spark: SparkSession,
     sf_dir: str,
     out_dir: str,
-    ctx: int = _PK_CTX,
+    ctx: int = PK_CTX,
     chunks_per_band: int = CHUNKS_PER_BAND,
 ) -> int:
     """Write the packed dataset as hive-partitioned parquet

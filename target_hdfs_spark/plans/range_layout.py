@@ -26,9 +26,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from target_hdfs_spark.operators.analytics import (
-    _qsk_bucket_expr,
-    _QSK_NBKT,
-    _QSK_W,
+    qsk_bucket_expr,
+    QSK_NBKT,
+    QSK_W,
 )
 
 
@@ -36,8 +36,8 @@ def plan_range_boundaries(
     df: DataFrame,
     value_col: str,
     parts: int,
-    width: int = _QSK_W,
-    nbkt: int = _QSK_NBKT,
+    width: int = QSK_W,
+    nbkt: int = QSK_NBKT,
 ) -> list[int]:
     """Equi-depth VALUE boundaries for `parts` ranges of `value_col`,
     from the deterministic fixed-boundary histogram (q266's walk, with
@@ -51,7 +51,7 @@ def plan_range_boundaries(
     if parts < 1:
         raise ValueError(f"parts must be >= 1, got {parts}")
     hist = (
-        df.select(_qsk_bucket_expr(value_col, width, nbkt).alias("bkt"))
+        df.select(qsk_bucket_expr(value_col, width, nbkt).alias("bkt"))
         .groupBy("bkt")
         .agg(F.count(F.lit(1)).alias("c"))
         .orderBy("bkt")
@@ -76,8 +76,8 @@ def assign_range_id(
     df: DataFrame,
     value_col: str,
     boundaries: list[int],
-    width: int = _QSK_W,
-    nbkt: int = _QSK_NBKT,
+    width: int = QSK_W,
+    nbkt: int = QSK_NBKT,
 ) -> DataFrame:
     """Attach `range_id` = the number of boundaries at or below the
     row's clamped bucket value — a pure map-side expression (no join,
@@ -96,8 +96,8 @@ def write_range_partitioned(
     path: str,
     parts: int,
     fmt: str = "parquet",
-    width: int = _QSK_W,
-    nbkt: int = _QSK_NBKT,
+    width: int = QSK_W,
+    nbkt: int = QSK_NBKT,
 ) -> list[int]:
     """Write `df` under `path` as `range_id=<i>` directories whose
     ranges are the sketch-planned equi-depth cuts of `value_col`.

@@ -28,32 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from target_hdfs_spark.plans.writer import SchemaChangedError, _normalize
-
-
-def _fs_for(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(hconf), jvm
-
-
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    fs, jvm = _fs_for(spark, path)
-    return bool(fs.exists(jvm.org.apache.hadoop.fs.Path(path)))
-
-
-def _recover_interrupted_swap(fs, jvm, dst_dir: str) -> None:
-    """Heal the one non-atomic window of :func:`_swap_dirs`: a crash
-    between stage-old and rename-new leaves `dst` absent with the data
-    stranded at `dst__old`. Restore it before doing anything else —
-    otherwise a subsequent writer would treat the dataset as missing
-    and discard the staged copy."""
-    dst = jvm.org.apache.hadoop.fs.Path(dst_dir)
-    old = jvm.org.apache.hadoop.fs.Path(dst_dir.rstrip("/") + "__old")
-    if not fs.exists(dst) and fs.exists(old):
-        if not fs.rename(old, dst):
-            raise OSError(f"swap recovery failed: {old} -> {dst}")
+from target_hdfs_spark import storage
+from target_hdfs_spark.plans.writer import SchemaChangedError, normalize
 
 
 def _pending_deletes_path(jvm, path: str):
@@ -88,11 +64,7 @@ def _write_upsert_manifest(
     lines += [f"S {n}" for n in written]
     lines += [f"D {n}" for n in to_delete]
     lines.append("#end")
-    out = fs.create(_pending_deletes_path(jvm, path), True)
-    try:
-        out.write(bytearray("\n".join(lines).encode("utf-8")))
-    finally:
-        out.close()
+    storage.write_text(fs, _pending_deletes_path(jvm, path), "\n".join(lines))
 
 
 def _recover_pending_deletes(fs, jvm, path: str) -> None:
@@ -110,20 +82,7 @@ def _recover_pending_deletes(fs, jvm, path: str) -> None:
     man = _pending_deletes_path(jvm, path)
     if not fs.exists(man):
         return
-    stream = fs.open(man)
-    try:
-        # byte-at-a-time read: py4j passes byte[] buffers by VALUE, so
-        # the bulk read(byte[]) overload can't return data through a
-        # Python bytearray; manifests are tiny (dir names only)
-        data = bytearray()
-        while True:
-            b = stream.read()
-            if b < 0:
-                break
-            data.append(b)
-    finally:
-        stream.close()
-    lines = data.decode("utf-8").splitlines()
+    lines = storage.read_text(fs, jvm, man).splitlines()
     tmp = _upsert_tmp_path(path)
     tmp_jpath = jvm.org.apache.hadoop.fs.Path(tmp)
     if lines and lines[0] == "#upsert-manifest-v2":
@@ -141,10 +100,10 @@ def _recover_pending_deletes(fs, jvm, path: str) -> None:
         for name in swaps:
             staged = jvm.org.apache.hadoop.fs.Path(f"{tmp}/{name}")
             if fs.exists(staged):
-                # _recover_interrupted_partition_swaps already ran, so
-                # the destination is consistent (old or new content);
+                # stranded partition swaps were healed first, so the
+                # destination is consistent (old or new content);
                 # staged-still-present means this swap never committed.
-                _swap_dirs(fs, jvm, staged.toString(), f"{path.rstrip('/')}/{name}")
+                swap_dirs(fs, jvm, staged.toString(), f"{path.rstrip('/')}/{name}")
     else:
         deletes = [ln for ln in lines if ln]
     for name in deletes:
@@ -162,14 +121,13 @@ def _recover_interrupted_partition_swaps(fs, jvm, path: str) -> None:
     its replacement strands `<col>=<v>__old` next to a missing
     `<col>=<v>`. This MUST run before any read of the dataset —
     Spark's partition discovery would parse `v__old` as a bogus
-    partition value and surface stale rows."""
-    base = jvm.org.apache.hadoop.fs.Path(path)
-    if not fs.exists(base):
-        return
-    for status in fs.listStatus(base):
-        name = status.getPath().getName()
-        if not status.isDirectory() or "=" not in name or not name.endswith("__old"):
+    partition value and surface stale rows. One glob finds the
+    strands, so a healthy dataset costs one metadata call however
+    many partitions it has."""
+    for status in storage.glob(fs, jvm, path, "*=*__old"):
+        if not status.isDirectory():
             continue
+        name = status.getPath().getName()
         dst = jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/{name[: -len('__old')]}")
         if fs.exists(dst):
             # crash landed after the commit rename, before cleanup:
@@ -179,12 +137,13 @@ def _recover_interrupted_partition_swaps(fs, jvm, path: str) -> None:
             raise OSError(f"partition swap recovery failed: {name}")
 
 
-def _swap_dirs(fs, jvm, new_dir: str, dst_dir: str) -> None:
+def swap_dirs(fs, jvm, new_dir: str, dst_dir: str) -> None:
     """Directory replacement with no no-data window in normal
     operation: stage old aside, rename new in, delete old. The one
     crash window (between the two renames) leaves the data stranded at
-    `dst__old`; callers run :func:`_recover_interrupted_swap` on entry
-    so the next job heals it before reading."""
+    `dst__old`; every job that writes the dataset runs
+    :func:`recover_dataset` on entry, so the next one heals it before
+    reading or appending."""
     dst = jvm.org.apache.hadoop.fs.Path(dst_dir)
     old = jvm.org.apache.hadoop.fs.Path(dst_dir.rstrip("/") + "__old")
     new = jvm.org.apache.hadoop.fs.Path(new_dir)
@@ -201,16 +160,30 @@ def _swap_dirs(fs, jvm, new_dir: str, dst_dir: str) -> None:
         fs.delete(old, True)
 
 
-def recover_dataset(spark: SparkSession, path: str) -> None:
+def recover_dataset(spark: SparkSession, path: str, partitioned: bool = True) -> None:
     """Entry-point recovery for a dataset managed by the swap
-    protocols: heal a whole-dataset swap stranded at `path__old` and
-    any per-partition swaps stranded at `<part>=<v>__old`. Every
-    engine job runs this on entry; exposed publicly so operators can
-    also heal a dataset before handing it to plain readers."""
-    fs, jvm = _fs_for(spark, path)
-    _recover_interrupted_swap(fs, jvm, path)
-    _recover_interrupted_partition_swaps(fs, jvm, path)
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(path)):
+    protocols: heal a whole-dataset swap stranded at `path__old`, and,
+    when `partitioned`, per-partition swaps stranded at
+    `<part>=<v>__old` and an interrupted partitioned-upsert commit
+    (its manifest). Every engine job that writes the dataset runs this
+    on entry — an append that recreated `path` first would let the
+    next swap delete the stranded data. Exposed publicly so operators
+    can also heal a dataset before handing it to plain readers.
+
+    Cheap when healthy (a few metadata calls, no listing loop) and
+    issues no rename or delete then. Like the swaps it heals, it
+    assumes one writing job per dataset at a time."""
+    fs, jvm = storage.filesystem(spark, path)
+    Path = jvm.org.apache.hadoop.fs.Path
+    dst = Path(path)
+    if not fs.exists(dst):
+        old = Path(path.rstrip("/") + "__old")
+        if not fs.exists(old):
+            return
+        if not fs.rename(old, dst):
+            raise OSError(f"swap recovery failed: {old} -> {dst}")
+    if partitioned:
+        _recover_interrupted_partition_swaps(fs, jvm, path)
         _recover_pending_deletes(fs, jvm, path)
 
 
@@ -220,7 +193,7 @@ def _norm_for_compare(schema, partition_col: str | None):
     it on read-back (a string '20240101' comes back int), which would
     fail every second upsert — the same name-only posture
     writer.enforce_schema_unchanged takes for partition columns."""
-    items = _normalize(schema)
+    items = normalize(schema)
     if partition_col is None:
         return sorted(items)
     return sorted(
@@ -289,12 +262,9 @@ def upsert(
                 "round-trip boolean hive partitions; cast to string first"
             )
     _reject_duplicate_update_keys(updates, keys)
-    fs, jvm = _fs_for(spark, path)
-    _recover_interrupted_swap(fs, jvm, path)
-    _recover_interrupted_partition_swaps(fs, jvm, path)
-    if _path_exists(spark, path):
-        _recover_pending_deletes(fs, jvm, path)
-    if not _path_exists(spark, path):
+    recover_dataset(spark, path)
+    fs, jvm = storage.filesystem(spark, path)
+    if not fs.exists(jvm.org.apache.hadoop.fs.Path(path)):
         # genuinely first write: nothing to merge. (An existence check,
         # NOT a bare try/except around the read — a transient read
         # failure must surface, not silently overwrite the dataset.)
@@ -312,7 +282,7 @@ def upsert(
     ):
         raise SchemaChangedError(
             f"upsert schema drift at {path}: "
-            f"{_normalize(existing.schema)} != {_normalize(updates.schema)}"
+            f"{normalize(existing.schema)} != {normalize(updates.schema)}"
         )
 
     tmp = _upsert_tmp_path(path)
@@ -367,12 +337,9 @@ def upsert(
         # __HIVE_DEFAULT_PARTITION__ for null). A rewritten partition
         # that came out EMPTY (all its rows were keys that moved away)
         # won't appear in tmp — those destinations must be dropped.
-        tmp_jpath = jvm.org.apache.hadoop.fs.Path(tmp)
-        written = []
-        for status in fs.listStatus(tmp_jpath):
-            name = status.getPath().getName()
-            if status.isDirectory() and "=" in name:
-                written.append(name)
+        written = [
+            s.getPath().getName() for s in storage.glob(fs, jvm, tmp, "*=*") if s.isDirectory()
+        ]
         # stale moved-key partitions: affected but produced no output
         # rows (every row they held was a key that moved elsewhere).
         # Compare decoded directory values against the SPARK string
@@ -402,21 +369,21 @@ def upsert(
         for name in written:
             # same stage-old/rename/rollback protocol as the
             # whole-dataset path — one implementation, two call sites
-            _swap_dirs(fs, jvm, f"{tmp}/{name}", f"{path.rstrip('/')}/{name}")
+            swap_dirs(fs, jvm, f"{tmp}/{name}", f"{path.rstrip('/')}/{name}")
         for name in to_delete:
             fs.delete(
                 jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/{name}"),
                 True,
             )
         fs.delete(_pending_deletes_path(jvm, path), False)
-        fs.delete(tmp_jpath, True)
+        fs.delete(jvm.org.apache.hadoop.fs.Path(tmp), True)
     else:
         anti_keys = F.broadcast(updates.select(*keys))
         merged = existing.join(
             anti_keys, _keys_condition(existing, anti_keys, keys), "left_anti"
         ).unionByName(updates)
         merged.write.mode("overwrite").parquet(tmp)
-        _swap_dirs(fs, jvm, tmp, path)
+        swap_dirs(fs, jvm, tmp, path)
 
 
 def _partition_value_of(dir_name: str, partition_col: str):
@@ -461,17 +428,15 @@ def soft_delete_older_versions(
             f"got {fmt!r} (delta/iceberg manage versions in their own "
             "metadata layer)"
         )
-    fs, jvm = _fs_for(spark, path)
-    _recover_interrupted_swap(fs, jvm, path)
-    _recover_interrupted_partition_swaps(fs, jvm, path)
-    if not _path_exists(spark, path):
+    # recovery includes an interrupted partitioned upsert's commit
+    # manifest: unhealed, the mergeSchema read below would resurrect
+    # stale moved-key partitions INTO the rewrite, making the
+    # duplicates permanent once swap_dirs replaces the dataset (and
+    # its manifest) wholesale
+    recover_dataset(spark, path)
+    fs, jvm = storage.filesystem(spark, path)
+    if not fs.exists(jvm.org.apache.hadoop.fs.Path(path)):
         return 0
-    # An interrupted partitioned upsert may have left its commit
-    # manifest (pending swaps/deletes) behind; without healing it the
-    # mergeSchema read below would resurrect stale moved-key partitions
-    # INTO the rewrite, making the duplicates permanent once _swap_dirs
-    # replaces the dataset (and its manifest) wholesale.
-    _recover_pending_deletes(fs, jvm, path)
     existing = (
         spark.read.option("mergeSchema", "true").format(fmt).load(path)
     )
@@ -501,5 +466,5 @@ def soft_delete_older_versions(
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.save(tmp)
-    _swap_dirs(fs, jvm, tmp, path)
+    swap_dirs(fs, jvm, tmp, path)
     return n_stale

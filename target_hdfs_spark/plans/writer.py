@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from target_hdfs_spark import storage
 from target_hdfs_spark.config import TargetConfig
 
 DEFAULT_BLOCK_SIZE = 128 * 1024 * 1024
@@ -86,8 +87,7 @@ def require_table_format(spark: SparkSession, table_format: str) -> None:
 def get_block_size(spark: SparkSession) -> int:
     """dfs.blocksize from the live Hadoop conf (no subprocess)."""
     try:
-        conf = spark.sparkContext._jsc.hadoopConfiguration()
-        return int(conf.getLongBytes("dfs.blocksize", DEFAULT_BLOCK_SIZE))
+        return storage.block_size(spark, DEFAULT_BLOCK_SIZE)
     except Exception:
         return DEFAULT_BLOCK_SIZE
 
@@ -128,7 +128,7 @@ def existing_schema(
         raise
 
 
-def _normalize(schema: T.StructType) -> list[tuple[str, str]]:
+def normalize(schema: T.StructType) -> list[tuple[str, str]]:
     # Nullability is writer-dependent noise; name + type is the
     # contract (the reference compares pa.Schema equality on files it
     # wrote itself, where nullability is stable).
@@ -152,12 +152,12 @@ def enforce_schema_unchanged(
     existing = existing_schema(spark, path, fmt)
     if existing is None:
         return
-    incoming = _normalize(df.schema)
+    incoming = normalize(df.schema)
     # partitionBy moves partition columns to the end of the on-disk
     # schema (and may widen types via directory inference) — compare
     # them by name only, data columns by name+type.
     part = set(partition_cols)
-    got = [c for c in _normalize(existing) if c[0] not in part]
+    got = [c for c in normalize(existing) if c[0] not in part]
     want = [c for c in incoming if c[0] not in part]
     if evolution == "additive":
         got_types = dict(got)
@@ -238,8 +238,15 @@ def write_stream(
     fast with `TableFormatUnavailableError` (+ remediation) when their
     runtime jars are absent — the capability is a tested interface,
     not a silent ClassNotFoundException.
+
+    Entry recovery first: a swap stranded by a crashed upsert or
+    rewrite is healed before anything reads or appends (see
+    `upsert.recover_dataset`).
     """
+    from target_hdfs_spark.plans.upsert import recover_dataset
+
     require_table_format(spark, config.table_format)
+    recover_dataset(spark, path, partitioned=bool(config.partition_cols))
     if not config.skip_existing_files:
         enforce_schema_unchanged(
             spark,

@@ -59,11 +59,8 @@ def write_zordered(
     any global sort-write, paid once at write time for every future
     scan's benefit.
     """
-    from target_hdfs_spark.plans.upsert import (
-        _fs_for,
-        _recover_interrupted_swap,
-        _swap_dirs,
-    )
+    from target_hdfs_spark import storage
+    from target_hdfs_spark.plans.upsert import recover_dataset, swap_dirs
 
     bounds = df.agg(
         F.min(F.col(col_a).cast("double")).alias("a_lo"),
@@ -77,8 +74,7 @@ def write_zordered(
     )
     # write-tmp-then-swap (the repo's rewrite discipline): re-laying-
     # out an existing dataset must not destroy it on a mid-job failure
-    fs, jvm = _fs_for(df.sparkSession, path)
-    _recover_interrupted_swap(fs, jvm, path)
+    recover_dataset(df.sparkSession, path)
     tmp = path.rstrip("/") + "__zorder_tmp"
     (
         df.crossJoin(F.broadcast(bounds))
@@ -90,4 +86,5 @@ def write_zordered(
         .option("compression", compression)
         .parquet(tmp)
     )
-    _swap_dirs(fs, jvm, tmp, path)
+    fs, jvm = storage.filesystem(df.sparkSession, path)
+    swap_dirs(fs, jvm, tmp, path)

@@ -108,10 +108,10 @@ def _encode_batches(batches):
     import pandas as pd
 
     from target_hdfs_spark.operators.multimodal import (
-        _AVI_MAX_FRAMES,
-        _IMG_GROUPS,
-        _PCM_N,
-        _group_pixels,
+        AVI_MAX_FRAMES,
+        IMG_GROUPS,
+        PCM_N,
+        group_pixels,
         encode_avi,
         encode_jpeg,
         encode_pcm_wav,
@@ -134,14 +134,14 @@ def _encode_batches(batches):
                 (
                     doc_id,
                     image,
-                    encode_png_full(_group_pixels(doc_id % _IMG_GROUPS)),
+                    encode_png_full(group_pixels(doc_id % IMG_GROUPS)),
                     encode_pcm_wav(doc_id),
                     encode_avi(doc_id),
                     "jpeg" if doc_id % 2 == 0 else "png",
                     w,
                     h,
-                    _PCM_N,
-                    1 + doc_id % _AVI_MAX_FRAMES,
+                    PCM_N,
+                    1 + doc_id % AVI_MAX_FRAMES,
                 )
             )
         yield pd.DataFrame(

@@ -10,7 +10,8 @@ This is the reference's entire runtime re-expressed (SURVEY.md §3.1):
                 reference semantics R28)
     ACTIVATE_VERSION -> record version (stamped when metadata is on)
 
-Two ingest paths share every transform and the writer:
+Two ingest paths share one shaping function
+(`transforms.shape_records`) and the writer:
 
 - `SingerPipe.process_lines` — protocol-faithful stdin loop. The
   driver-side record buffer is bounded by max_batch_size; each flush
@@ -30,19 +31,14 @@ import sys
 from collections.abc import Iterable, Iterator
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
+from target_hdfs_spark import storage
 from target_hdfs_spark.config import TargetConfig
 from target_hdfs_spark.plans.writer import write_stream
 from target_hdfs_spark.sources.jsonschema import jsonschema_to_spark
-from target_hdfs_spark.transforms import (
-    apply_stream_map,
-    flatten,
-    with_extra_fields,
-    with_record_metadata,
-)
+from target_hdfs_spark.transforms import shape_records
 
 
 class RecordValidationError(ValueError):
@@ -336,9 +332,8 @@ class SingerPipe:
             return
         base = f"{self.config.destination_path.rstrip('/')}/_dlq"
         if not self._dlq_layout_checked:
-            from target_hdfs_spark.plans.compaction import _fs
-
-            fs, jpath, _ = _fs(self.spark, base)
+            fs, jvm = storage.filesystem(self.spark, base)
+            jpath = jvm.org.apache.hadoop.fs.Path(base)
             if fs.exists(jpath):
                 legacy = [
                     s.getPath().getName()
@@ -373,7 +368,7 @@ class SingerPipe:
             buf.records.clear()
             return
         df = self.spark.createDataFrame(buf.records, schema=buf.schema)
-        df = self._shape(name, df, buf)
+        df = shape_records(df, self.config, name, buf.version)
         write_stream(
             self.spark,
             df,
@@ -384,24 +379,6 @@ class SingerPipe:
         buf.rows_written += len(buf.records)
         buf.files_flushed += 1
         buf.records.clear()
-
-    def _shape(self, name: str, df: DataFrame, buf: _StreamBuffer) -> DataFrame:
-        df = flatten(df, self.config.flattening_max_depth)
-        smap = self.config.stream_maps.get(name)
-        if smap:
-            df = apply_stream_map(df, smap)
-        df = with_extra_fields(df, self.config.extra_fields, self.config.extra_fields_types)
-        if self.config.add_record_metadata:
-            df = with_record_metadata(df)
-            # ALWAYS stamp the version column (null before any
-            # activation): adding it only post-activation changes the
-            # on-disk schema mid-stream and trips the strict drift
-            # guard — the same stability rule _sdc_deleted_at follows
-            df = df.withColumn(
-                "_sdc_table_version",
-                F.lit(buf.version).cast("bigint"),
-            )
-        return df
 
 
 def ingest_jsonl_dir(
@@ -423,11 +400,5 @@ def ingest_jsonl_dir(
         return  # stream removed by stream map: no read, no sink
     schema = jsonschema_to_spark(json_schema)
     df = spark.read.schema(schema).option("mode", "FAILFAST").json(jsonl_path)
-    df = flatten(df, config.flattening_max_depth)
-    smap = config.stream_maps.get(stream_name)
-    if smap:
-        df = apply_stream_map(df, smap)
-    df = with_extra_fields(df, config.extra_fields, config.extra_fields_types)
-    if config.add_record_metadata:
-        df = with_record_metadata(df)
+    df = shape_records(df, config, stream_name)
     write_stream(spark, df, config.stream_path(stream_name), config)

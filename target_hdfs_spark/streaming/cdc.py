@@ -43,8 +43,8 @@ from pyspark.sql.streaming import StreamingQuery
 
 from target_hdfs_spark.streaming.sampling import (
     KEEP_SNAPSHOTS,
-    _prune_snapshots,
-    _snapshot_versions,
+    prune_snapshots,
+    snapshot_versions,
 )
 
 _STATE_COLS = ("user_id", "op", "value", "ts", "event_id")
@@ -81,7 +81,7 @@ def latest_per_key(changes: DataFrame) -> DataFrame:
 def current_state(spark: SparkSession, sink_dir: str) -> DataFrame | None:
     """The visible state: latest complete snapshot minus tombstones,
     in the batch twin's output schema."""
-    versions = _snapshot_versions(spark, sink_dir)
+    versions = snapshot_versions(spark, sink_dir)
     if not versions:
         return None
     snap = spark.read.parquet(f"{sink_dir}/snap={max(versions)}")
@@ -107,7 +107,7 @@ def stream_cdc_apply(
     def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
         batch_changes = latest_per_key(classify_ops(batch_df))
-        prior = [v for v in _snapshot_versions(sess, sink_dir) if v < batch_id]
+        prior = [v for v in snapshot_versions(sess, sink_dir) if v < batch_id]
         if prior:
             prev = sess.read.parquet(f"{sink_dir}/snap={max(prior)}").select(
                 *_STATE_COLS
@@ -126,7 +126,7 @@ def stream_cdc_apply(
         merged.select(*_STATE_COLS).write.mode("overwrite").parquet(
             f"{sink_dir}/snap={batch_id}"
         )
-        _prune_snapshots(sess, sink_dir, KEEP_SNAPSHOTS)
+        prune_snapshots(sess, sink_dir, KEEP_SNAPSHOTS)
 
     return (
         events.writeStream.foreachBatch(fold_batch)

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from target_hdfs_spark import storage
 from target_hdfs_spark.functions.textfuncs import tokens
 
 # Quality thresholds — the batch gate's exact rules (operators/text.py
@@ -54,21 +55,6 @@ def quality_gate(df: DataFrame) -> DataFrame:
     )
 
 
-def _index_batches(spark: SparkSession, index_dir: str) -> dict[int, str]:
-    """batch_id -> path for every committed index directory."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(index_dir)
-    fs = root.getFileSystem(hconf)
-    if not fs.exists(root):
-        return {}
-    return {
-        int(st.getPath().getName().split("=", 1)[1]): st.getPath().toString()
-        for st in fs.listStatus(root)
-        if st.isDirectory() and st.getPath().getName().startswith("batch_id=")
-    }
-
-
 def _read_index_before(
     spark: SparkSession,
     index_dir: str,
@@ -79,7 +65,7 @@ def _read_index_before(
     (a replayed batch must not see its own crashed half-write). With a
     retention horizon, only the newest ``retention_batches`` prior
     batches are consulted — the bounded-state mode."""
-    batches = _index_batches(spark, index_dir)
+    batches = storage.child_dirs(spark, index_dir, "batch_id")
     prior_ids = sorted(b for b in batches if b < batch_id)
     if retention_batches is not None:
         prior_ids = prior_ids[-retention_batches:]
@@ -105,12 +91,10 @@ def _prune_index(
     after a crash between this prune and the checkpoint commit
     (the replay would see N-1 prior dirs and re-admit a duplicate
     its original run rejected)."""
-    batches = _index_batches(spark, index_dir)
+    batches = storage.child_dirs(spark, index_dir, "batch_id")
     prior = sorted(b for b in batches if b < batch_id)[-retention_batches:]
     keep = set(prior) | {batch_id}
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.Path(index_dir).getFileSystem(hconf)
+    fs, jvm = storage.filesystem(spark, index_dir)
     for b, path in batches.items():
         if b <= batch_id and b not in keep:
             fs.delete(jvm.org.apache.hadoop.fs.Path(path), True)

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from target_hdfs_spark import storage
+
 CLASSES = ("click", "error", "purchase", "signup", "view")
 
 
@@ -62,20 +64,8 @@ def latest_readings(spark: SparkSession, sink_dir: str) -> DataFrame | None:
     dir that can fail the read or surface uncommitted rows until the
     replay overwrites it — gate on ``_SUCCESS`` like the repo's other
     sink readers (trending, sampling, CDC)."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
     root_dir = f"{sink_dir}/reading"
-    root = jvm.org.apache.hadoop.fs.Path(root_dir)
-    fs = root.getFileSystem(hconf)
-    if not fs.exists(root):
-        return None
-    complete = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith("batch=")):
-            continue
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS")):
-            complete.append(f"{root_dir}/{name}")
+    complete = list(storage.committed_dirs(spark, root_dir, "batch").values())
     if not complete:
         return None
     return spark.read.option("basePath", root_dir).parquet(*complete)
@@ -104,16 +94,11 @@ def stream_drift_monitor(
             return
         base_path = f"{sink_dir}/baseline"
         if not baseline_cache:
-            jvm = sess.sparkContext._jvm
-            hconf = sess.sparkContext._jsc.hadoopConfiguration()
-            jpath = jvm.org.apache.hadoop.fs.Path(base_path)
-            fs = jpath.getFileSystem(hconf)
             # completeness gate: a crash mid-baseline-write leaves the
             # directory WITHOUT _SUCCESS; existence alone would wedge
             # the stream forever (skip rewrite + fail reading the
             # partial dir)
-            success = jvm.org.apache.hadoop.fs.Path(base_path + "/_SUCCESS")
-            if not (fs.exists(jpath) and fs.exists(success)):
+            if not storage.is_committed(sess, base_path):
                 # first content-bearing batch defines the baseline; a
                 # replay recomputes identical counts and overwrites
                 sess.createDataFrame([counts]).coalesce(1).write.mode(

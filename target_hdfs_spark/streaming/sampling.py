@@ -20,10 +20,9 @@ top-k). After a successful write, snapshots older than the last
 ``KEEP_SNAPSHOTS`` complete versions are pruned, so the sink holds
 O(k · KEEP_SNAPSHOTS) rows regardless of stream lifetime.
 
-All sink-side listing goes through the Hadoop FileSystem API resolved
-from the session's ``hadoopConfiguration`` — the sink may be HDFS/S3,
-where ``os.listdir`` would silently see nothing and the fold would
-degenerate to per-batch top-k.
+All sink-side listing goes through the Hadoop FileSystem API
+(``storage``) — the sink may be HDFS/S3, where ``os.listdir`` would
+silently see nothing and the fold would degenerate to per-batch top-k.
 
 Scale: per trigger the work is O(batch + k): batch priorities are
 scan-side expressions, the union with k prior rows is tiny, and the
@@ -37,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from target_hdfs_spark import storage
 from target_hdfs_spark.functions.hashing import md5_hash32
 
 # complete snapshot versions retained after each successful write (the
@@ -44,54 +44,26 @@ from target_hdfs_spark.functions.hashing import md5_hash32
 KEEP_SNAPSHOTS = 3
 
 
-def _snapshot_versions(spark: SparkSession, sink_dir: str) -> list[int]:
+def snapshot_versions(spark: SparkSession, sink_dir: str) -> list[int]:
     """Version numbers of COMPLETE (``_SUCCESS``-marked) snapshot
-    directories under ``sink_dir``, via the Hadoop FileSystem for the
-    sink's scheme (works for file://, hdfs://, s3a://...)."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(sink_dir)
-    fs = root.getFileSystem(hconf)
-    if not fs.exists(root):
-        return []
-    versions = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith("snap=")):
-            continue
-        if not fs.exists(jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS")):
-            continue  # half-written: crash before the directory commit
-        versions.append(int(name.split("=", 1)[1]))
-    return versions
+    directories under ``sink_dir``."""
+    return list(storage.committed_dirs(spark, sink_dir, "snap"))
 
 
-def _prune_snapshots(spark: SparkSession, sink_dir: str, keep: int) -> None:
+def prune_snapshots(spark: SparkSession, sink_dir: str, keep: int) -> None:
     """Delete all but the newest ``keep`` complete snapshots, plus any
     INCOMPLETE snapshot directories older than the newest complete
     version (crash leftovers without ``_SUCCESS`` — readers already
     ignore them, but without this sweep they would accumulate
     unboundedly on a long-lived crashy stream)."""
-    versions = sorted(_snapshot_versions(spark, sink_dir))
+    versions = sorted(snapshot_versions(spark, sink_dir))
     if not versions:
         return
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(sink_dir)
-    fs = root.getFileSystem(hconf)
-    for v in versions[:-keep]:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{sink_dir}/snap={v}"), True)
-    newest = versions[-1]
-    complete = set(versions)
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith("snap=")):
-            continue
-        try:
-            v = int(name.split("=", 1)[1])
-        except ValueError:
-            continue
-        if v < newest and v not in complete:
-            fs.delete(st.getPath(), True)
+    complete, stale = set(versions), set(versions[:-keep])
+    fs, jvm = storage.filesystem(spark, sink_dir)
+    for v, path in storage.child_dirs(spark, sink_dir, "snap").items():
+        if v in stale or (v < versions[-1] and v not in complete):
+            fs.delete(jvm.org.apache.hadoop.fs.Path(path), True)
 
 
 def doc_priority(weight_col: str = "n_chars") -> F.Column:
@@ -106,7 +78,7 @@ def doc_priority(weight_col: str = "n_chars") -> F.Column:
 
 def latest_sample(spark: SparkSession, sink_dir: str) -> DataFrame | None:
     """The current sample: rows of the highest COMPLETE snapshot."""
-    versions = _snapshot_versions(spark, sink_dir)
+    versions = snapshot_versions(spark, sink_dir)
     if not versions:
         return None
     path = f"{sink_dir}/snap={max(versions)}"
@@ -132,13 +104,13 @@ def stream_priority_sample(
         scored = batch_df.select(*cols, doc_priority(weight_col).alias("priority"))
         # strictly-earlier COMPLETE snapshot only: a replayed batch must
         # not read its own half-written output
-        prior = [v for v in _snapshot_versions(sess, sink_dir) if v < batch_id]
+        prior = [v for v in snapshot_versions(sess, sink_dir) if v < batch_id]
         if prior:
             current = sess.read.parquet(f"{sink_dir}/snap={max(prior)}")
             scored = scored.unionByName(current)
         topk = scored.orderBy(F.col("priority").desc(), "doc_id").limit(k)
         topk.write.mode("overwrite").parquet(f"{sink_dir}/snap={batch_id}")
-        _prune_snapshots(sess, sink_dir, KEEP_SNAPSHOTS)
+        prune_snapshots(sess, sink_dir, KEEP_SNAPSHOTS)
 
     return (
         docs.writeStream.foreachBatch(fold_batch)

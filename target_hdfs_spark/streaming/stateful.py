@@ -761,7 +761,7 @@ SEQ_PATTERNS: dict[str, dict] = {
 }
 
 
-def _gap_first(spec: dict) -> tuple[str, ...]:
+def gap_first(spec: dict) -> tuple[str, ...]:
     """The start step's allowed types (alternation normalizes str to
     a 1-tuple)."""
     if "steps" in spec:
@@ -775,7 +775,7 @@ def _gap_last(spec: dict) -> str:
     return spec["steps"][-1] if "steps" in spec else spec["last"]
 
 
-def _gap_form(spec: dict) -> str:
+def gap_form(spec: dict) -> str:
     """'steps' (multi-step gapped sequence), 'any' (bounded gap),
     'not' (negated gap), or 'quant' (contiguous one-or-more
     quantifier)."""
@@ -790,7 +790,7 @@ def _gap_form(spec: dict) -> str:
 
 def _validate_gap_patterns(patterns: dict[str, dict]) -> None:
     for _n, _p in patterns.items():
-        form = _gap_form(_p)
+        form = gap_form(_p)
         if form == "steps":
             assert len(_p["steps"]) >= 3, _n  # 2-step = the 'any' form
             assert _p["within"] >= len(_p["steps"]), _n
@@ -798,7 +798,7 @@ def _validate_gap_patterns(patterns: dict[str, dict]) -> None:
         if form == "any":
             # middle_any=True with a middle_not set would silently
             # classify as the 'any' form and DROP the negation
-            # (_gap_form checks middle_any first) — keep the
+            # (gap_form checks middle_any first) — keep the
             # contradictory spec a registration-time error like the
             # A B+ B case (ADVICE r7)
             assert _p.get("middle_not") is None, _n
@@ -812,7 +812,7 @@ def _validate_gap_patterns(patterns: dict[str, dict]) -> None:
         if form == "not":
             assert _p["middle"] is None, _n
         assert _p["within"] >= (3 if form == "quant" else 2), _n
-        assert _gap_first(_p), _n
+        assert gap_first(_p), _n
 
 
 _validate_gap_patterns(GAP_PATTERNS)
@@ -826,11 +826,11 @@ def _subseq_in(needles: tuple[str, ...], hay: list[str]) -> bool:
     return all(n in it for n in needles)
 
 
-def _gap_keep(patterns: dict[str, dict]) -> int:
+def gap_keep(patterns: dict[str, dict]) -> int:
     return max(p["within"] for p in patterns.values()) - 1
 
 
-GAP_KEEP = _gap_keep(GAP_PATTERNS)
+GAP_KEEP = gap_keep(GAP_PATTERNS)
 
 GAP_OUTPUT_SCHEMA = T.StructType(
     [
@@ -867,7 +867,7 @@ def _gap_completions(
     for name, spec in (patterns or GAP_PATTERNS).items():
         if etype != _gap_last(spec):
             continue
-        form = _gap_form(spec)
+        form = gap_form(spec)
         min_span = (
             len(spec["steps"]) if form == "steps"
             else 3 if form == "quant"
@@ -877,7 +877,7 @@ def _gap_completions(
             span = len(window) - s
             if span < min_span or span > spec["within"]:
                 continue
-            if window[s][0] not in _gap_first(spec):
+            if window[s][0] not in gap_first(spec):
                 continue
             between = [t for t, _ in window[s + 1 : -1]]
             if form == "steps":
@@ -917,7 +917,7 @@ def _gap_match_group(
     patterns: dict[str, dict] | None = None,
 ) -> Iterable[pd.DataFrame]:
     patterns = patterns or GAP_PATTERNS
-    keep = _gap_keep(patterns)
+    keep = gap_keep(patterns)
     empty = pd.DataFrame(
         {
             "user_id": [],
@@ -2516,17 +2516,17 @@ def pack_offset_stream(
 
     from target_hdfs_spark.functions.hashing import md5_hash32
     from target_hdfs_spark.functions.textfuncs import tokens
-    from target_hdfs_spark.operators.packing import _PK_BKT_W, _PK_SALT
+    from target_hdfs_spark.operators.packing import PK_BKT_W, PK_SALT
 
     base_cols = ["doc_id"] + (["ts"] if state_ttl_ms is not None else [])
     prepared = docs.select(
         *base_cols,
         F.size(tokens("text")).cast("long").alias("n_toks"),
         md5_hash32(
-            F.concat(F.lit(_PK_SALT), F.col("doc_id").cast("string"))
+            F.concat(F.lit(PK_SALT), F.col("doc_id").cast("string"))
         ).alias("ord_h"),
     ).filter(F.col("n_toks") > 0)
-    prepared = prepared.withColumn("bkt", F.expr(f"ord_h div {_PK_BKT_W}"))
+    prepared = prepared.withColumn("bkt", F.expr(f"ord_h div {PK_BKT_W}"))
 
     def fn(key, pdfs, state):
         return _pack_group(key, pdfs, state, state_ttl_ms)
@@ -2587,7 +2587,7 @@ def _bucket_batch_group(
     state: GroupState,
     ttl_ms: int | None = None,
 ) -> Iterable[pd.DataFrame]:
-    from target_hdfs_spark.operators.packing import _LBB_CAP
+    from target_hdfs_spark.operators.packing import LBB_CAP
 
     cols = [f.name for f in BATCH_OUTPUT_SCHEMA.fields]
     empty = pd.DataFrame({c: [] for c in cols}).astype("int64")
@@ -2616,7 +2616,7 @@ def _bucket_batch_group(
         state.setTimeoutTimestamp(last_ms + ttl_ms)
     b = int(key[0])
     padded = n_docs * b
-    cap = _LBB_CAP // b
+    cap = LBB_CAP // b
     yield pd.DataFrame(
         [
             (
@@ -2663,7 +2663,7 @@ def bucket_batch_stream(
     from pyspark.sql import functions as F
 
     from target_hdfs_spark.functions.textfuncs import tokens
-    from target_hdfs_spark.operators.packing import _LBB_CAP, _bucket_case_sql
+    from target_hdfs_spark.operators.packing import LBB_CAP, bucket_case_sql
 
     base_cols = ["ts"] if state_ttl_ms is not None else []
     prepared = (
@@ -2672,8 +2672,8 @@ def bucket_batch_stream(
             F.size(tokens("text")).cast("long").alias("n_toks"),
         )
         .filter(F.col("n_toks") > 0)
-        .withColumn("eff", F.least(F.col("n_toks"), F.lit(_LBB_CAP)))
-        .withColumn("bucket_len", F.expr(_bucket_case_sql("eff")))
+        .withColumn("eff", F.least(F.col("n_toks"), F.lit(LBB_CAP)))
+        .withColumn("bucket_len", F.expr(bucket_case_sql("eff")))
     )
 
     def fn(key, pdfs, state):
@@ -2923,15 +2923,15 @@ def dsir_model_stream(
     from target_hdfs_spark.functions.hashing import md5_hash32
     from target_hdfs_spark.functions.textfuncs import shingles, tokens
     from target_hdfs_spark.operators.curation import (
-        _DSIR_B,
-        _DSIR_TGT_LANG,
+        DSIR_B,
+        DSIR_TGT_LANG,
     )
 
     base_cols = ["ts"] if state_ttl_ms is not None else []
     prepared = (
         docs.select(
             *base_cols,
-            F.when(F.col("lang") == _DSIR_TGT_LANG, 1)
+            F.when(F.col("lang") == DSIR_TGT_LANG, 1)
             .otherwise(0)
             .alias("is_tgt"),
             tokens("text").alias("toks"),
@@ -2945,7 +2945,7 @@ def dsir_model_stream(
         .select(
             *base_cols,
             "is_tgt",
-            (md5_hash32("gram") % _DSIR_B).alias("bucket"),
+            (md5_hash32("gram") % DSIR_B).alias("bucket"),
         )
     )
 

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from target_hdfs_spark import storage
 from target_hdfs_spark.functions.textfuncs import tokens
 
 
@@ -100,18 +101,7 @@ def read_trending(spark, sink_dir: str) -> DataFrame:
     commit leaves a half-written directory that the replay will
     overwrite; exposing it early would surface uncommitted rows (the
     same gate the sampling/CDC snapshot protocol applies)."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(sink_dir)
-    fs = root.getFileSystem(hconf)
-    complete = []
-    if fs.exists(root):
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
-            if not (st.isDirectory() and name.startswith("batch_id=")):
-                continue
-            if fs.exists(jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS")):
-                complete.append(f"{sink_dir}/{name}")
+    complete = list(storage.committed_dirs(spark, sink_dir, "batch_id").values())
     if not complete:
         return None  # nothing committed yet (mirrors latest_sample)
     return (

@@ -2,6 +2,8 @@
 injection, Singer `_sdc_*` metadata columns, and config-driven stream
 maps. All pure DataFrame -> DataFrame functions (testable with no
 cluster, reference §3.3 boundary), all JVM-side expressions.
+:func:`shape_records` chains them in the one order every ingest path
+(Singer pipe, staged-JSONL batch load, streaming ingest) applies.
 """
 
 from __future__ import annotations
@@ -9,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from target_hdfs_spark.config import TargetConfig
 
 SEP = "__"
 
@@ -98,11 +102,15 @@ def with_extra_fields(
     return df
 
 
-def with_record_metadata(df: DataFrame) -> DataFrame:
+def with_record_metadata(df: DataFrame, table_version: int | None = None) -> DataFrame:
     """Singer `_sdc_*` audit columns (inherited surface, SURVEY §1.3).
 
     `_sdc_received_at`/`_sdc_batched_at` are stamped at ingest time;
     `_sdc_extracted_at` passes through if the tap provided it.
+    `_sdc_table_version` is ALWAYS stamped — null before any
+    ACTIVATE_VERSION, the activated version after: adding it only
+    post-activation, or only on some ingest paths, would change the
+    on-disk schema mid-stream and trip the strict drift guard.
     """
     now = F.current_timestamp()
     df = df.withColumn("_sdc_received_at", now).withColumn("_sdc_batched_at", now)
@@ -112,6 +120,26 @@ def with_record_metadata(df: DataFrame) -> DataFrame:
     # change the on-disk schema (drift guard stays green across runs)
     if "_sdc_deleted_at" not in df.columns:
         df = df.withColumn("_sdc_deleted_at", F.lit(None).cast("timestamp"))
+    return df.withColumn("_sdc_table_version", F.lit(table_version).cast("bigint"))
+
+
+def shape_records(
+    df: DataFrame,
+    config: TargetConfig,
+    stream_name: str,
+    table_version: int | None = None,
+) -> DataFrame:
+    """The record-shaping pipeline every ingest path runs before the
+    writer: flatten, the stream's map, extra fields, then (when
+    configured) the `_sdc_*` metadata. One function, so every path
+    writes one schema for the same stream and config."""
+    df = flatten(df, config.flattening_max_depth)
+    smap = config.stream_maps.get(stream_name)
+    if smap:
+        df = apply_stream_map(df, smap)
+    df = with_extra_fields(df, config.extra_fields, config.extra_fields_types)
+    if config.add_record_metadata:
+        df = with_record_metadata(df, table_version)
     return df
 
 

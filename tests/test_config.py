@@ -147,3 +147,32 @@ def test_config_env_specific_prefix_wins(monkeypatch):
     monkeypatch.setenv("TARGET_HDFS_SPARK_COMPRESSION_METHOD", "snappy")
     cfg = config_from_env(dotenv_path="/nonexistent/.env")
     assert cfg.compression == "snappy"
+
+
+def test_about_lists_every_setting_from_dict_reads():
+    """`--about` is the config surface: every key TargetConfig.from_dict
+    reads must be advertised, with the enums the config validates."""
+    from target_hdfs_spark import config as cfg
+    from target_hdfs_spark.ingest import ABOUT
+
+    class Recorder(dict):
+        def __init__(self, *a, **k):
+            super().__init__(*a, **k)
+            self.read: set[str] = set()
+
+        def get(self, key, default=None):
+            self.read.add(key)
+            return super().get(key, default)
+
+        def __getitem__(self, key):
+            self.read.add(key)
+            return super().__getitem__(key)
+
+    raw = Recorder(hdfs_destination_path="/d", partition_cols=["p"])
+    TargetConfig.from_dict(raw)
+    assert raw.read - set(ABOUT["settings"]) == set()
+    settings = ABOUT["settings"]
+    assert settings["compression_method"]["enum"] == list(cfg.VALID_COMPRESSION)
+    assert settings["table_format"]["enum"] == list(cfg.VALID_TABLE_FORMATS)
+    assert settings["schema_evolution"]["enum"] == list(cfg.VALID_SCHEMA_EVOLUTION)
+    assert settings["on_invalid_record"]["enum"] == list(cfg.VALID_ON_INVALID)

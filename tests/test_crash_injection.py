@@ -4,7 +4,12 @@ of each two-phase commit, then prove the next job heals the dataset
 exactly — no lost rows, no duplicates, no bogus partitions.
 
 Covers: unpartitioned upsert swap, per-partition upsert swap,
-compaction manifest commit (both crash windows), zorder swap.
+compaction manifest commit (both crash windows), zorder swap, and an
+append or compaction arriving before the next upsert heals a
+stranded swap.
+
+The proxy is installed on ``storage.filesystem``, the one accessor
+every job resolves its FileSystem through.
 """
 
 from __future__ import annotations
@@ -13,10 +18,11 @@ import glob
 
 import pytest
 
-from target_hdfs_spark.plans import compaction as compaction_mod
-from target_hdfs_spark.plans import upsert as upsert_mod
-from target_hdfs_spark.plans.compaction import compact_directory
+from target_hdfs_spark import storage
+from target_hdfs_spark.config import TargetConfig
+from target_hdfs_spark.plans.compaction import compact_directory, compact_stream
 from target_hdfs_spark.plans.upsert import upsert
+from target_hdfs_spark.plans.writer import write_stream
 from target_hdfs_spark.plans.zorder import write_zordered
 
 
@@ -51,20 +57,20 @@ class CrashingFS:
         return getattr(self._real, name)
 
 
+def _install_crashing_fs(monkeypatch, crash_on: dict[str, int]) -> None:
+    """Wrap every FS that storage.filesystem returns with a CrashingFS."""
+    real_filesystem = storage.filesystem
+
+    def crashing_filesystem(spark, path):
+        fs, jvm = real_filesystem(spark, path)
+        return CrashingFS(fs, crash_on), jvm
+
+    monkeypatch.setattr(storage, "filesystem", crashing_filesystem)
+
+
 @pytest.fixture
 def inject_upsert_fs(monkeypatch):
-    """Wrap the FS returned by upsert._fs_for with a CrashingFS."""
-
-    def _install(crash_on: dict[str, int]):
-        real_fs_for = upsert_mod._fs_for
-
-        def crashing_fs_for(spark, path):
-            fs, jvm = real_fs_for(spark, path)
-            return CrashingFS(fs, crash_on), jvm
-
-        monkeypatch.setattr(upsert_mod, "_fs_for", crashing_fs_for)
-
-    yield _install
+    yield lambda crash_on: _install_crashing_fs(monkeypatch, crash_on)
 
 
 def test_upsert_crash_between_swap_renames(spark, tmp_path, inject_upsert_fs):
@@ -126,16 +132,7 @@ def _make_small_files(spark, path, n=3):
 
 @pytest.fixture
 def inject_compaction_fs(monkeypatch):
-    def _install(crash_on: dict[str, int]):
-        real_fs = compaction_mod._fs
-
-        def crashing_fs(spark, path):
-            fs, jpath, jvm = real_fs(spark, path)
-            return CrashingFS(fs, crash_on), jpath, jvm
-
-        monkeypatch.setattr(compaction_mod, "_fs", crashing_fs)
-
-    yield _install
+    yield lambda crash_on: _install_crashing_fs(monkeypatch, crash_on)
 
 
 def test_compaction_crash_after_manifest_before_moves(
@@ -201,3 +198,75 @@ def test_zorder_crash_between_swap_renames(spark, tmp_path, inject_upsert_fs):
     write_zordered(spark.read.parquet(path), path, "k", "a")
     after = sorted(tuple(r) for r in spark.read.parquet(path).collect())
     assert after == before
+
+
+# An append (or compaction) that lands between a crashed swap and the
+# next upsert must heal the strand first: appending recreates `path`
+# (or `<col>=<v>`), after which the next swap takes the stranded copy
+# for a stale leftover and deletes it.
+
+
+def test_append_after_crashed_upsert_swap_keeps_stranded_rows(
+    spark, tmp_path, inject_upsert_fs
+):
+    path = str(tmp_path / "t")
+    spark.createDataFrame([(1, "a"), (2, "b")], "k long, s string").write.parquet(path)
+    inject_upsert_fs({"rename": 2})
+    updates = spark.createDataFrame([(2, "B2"), (3, "c")], "k long, s string")
+    with pytest.raises(RuntimeError, match="injected crash"):
+        upsert(spark, updates, path, keys=["k"])
+    assert glob.glob(f"{path}__old/*.parquet")
+
+    config = TargetConfig(destination_path=str(tmp_path))
+    write_stream(
+        spark, spark.createDataFrame([(4, "d")], "k long, s string"), path, config
+    )
+    upsert(spark, updates, path, keys=["k"])
+    got = {r.k: r.s for r in spark.read.parquet(path).collect()}
+    assert got == {1: "a", 2: "B2", 3: "c", 4: "d"}
+    assert not glob.glob(f"{path}__old")
+
+
+@pytest.mark.parametrize("kill", [{"rename": 1}, {"rename": 2}])
+def test_append_after_crashed_partition_swap_keeps_rows(
+    spark, tmp_path, inject_upsert_fs, kill
+):
+    # rename #1 crashes with only the commit manifest written (the
+    # staged partition still waits in the tmp dataset); rename #2
+    # strands country=de__old as well
+    path = str(tmp_path / "t")
+    schema = "k long, country string, v double"
+    spark.createDataFrame([(1, "de", 1.0), (2, "fr", 2.0)], schema).write.partitionBy(
+        "country"
+    ).parquet(path)
+    inject_upsert_fs(kill)
+    updates = spark.createDataFrame([(1, "de", 9.0)], schema)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        upsert(spark, updates, path, keys=["k"], partition_col="country")
+
+    config = TargetConfig(destination_path=str(tmp_path), partition_cols=("country",))
+    write_stream(spark, spark.createDataFrame([(3, "de", 3.0)], schema), path, config)
+    upsert(spark, updates, path, keys=["k"], partition_col="country")
+    got = {r.k: (r.country, r.v) for r in spark.read.parquet(path).collect()}
+    assert got == {1: ("de", 9.0), 2: ("fr", 2.0), 3: ("de", 3.0)}
+    assert not glob.glob(f"{path}/country=de__old")
+
+
+def test_compact_stream_after_crashed_partition_swap_heals_first(
+    spark, tmp_path, inject_upsert_fs
+):
+    path = str(tmp_path / "t")
+    schema = "k long, country string, v double"
+    spark.createDataFrame([(1, "de", 1.0), (2, "fr", 2.0)], schema).write.partitionBy(
+        "country"
+    ).parquet(path)
+    inject_upsert_fs({"rename": 2})
+    updates = spark.createDataFrame([(1, "de", 9.0)], schema)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        upsert(spark, updates, path, keys=["k"], partition_col="country")
+    assert glob.glob(f"{path}/country=de__old/*.parquet")
+
+    compact_stream(spark, path, partitioned=True)
+    assert not glob.glob(f"{path}/country=de__old")
+    got = {r.k: (r.country, r.v) for r in spark.read.parquet(path).collect()}
+    assert got == {1: ("de", 9.0), 2: ("fr", 2.0)}

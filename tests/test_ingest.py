@@ -12,7 +12,12 @@ import pytest
 
 from target_hdfs_spark.config import TargetConfig
 from target_hdfs_spark.plans.writer import SchemaChangedError
-from target_hdfs_spark.sources.singer import RecordValidationError, SingerPipe
+from target_hdfs_spark.sources.singer import (
+    RecordValidationError,
+    SingerPipe,
+    ingest_jsonl_dir,
+)
+from target_hdfs_spark.streaming.ingest import stream_jsonl_dir
 
 
 def _schema_msg(stream, props):
@@ -722,3 +727,39 @@ def test_stream_map_invalid_shape_fails_eagerly():
             destination_path="/tmp/x",
             stream_maps={"orders": "drop-me"},
         )
+
+
+def _load_staged_batch(spark, config, stream, src, schema, tmp_path):
+    ingest_jsonl_dir(spark, config, stream, str(src), schema)
+
+
+def _load_staged_stream(spark, config, stream, src, schema, tmp_path):
+    q = stream_jsonl_dir(spark, config, stream, schema, str(src), str(tmp_path / "ckpt"))
+    q.awaitTermination(120)
+
+
+@pytest.mark.parametrize(
+    "load", [_load_staged_batch, _load_staged_stream], ids=["batch", "stream"]
+)
+def test_record_metadata_schema_shared_across_ingest_paths(spark, tmp_path, load):
+    """A stream first loaded from staged JSONL, then continued over the
+    Singer wire, keeps one on-disk schema: every path stamps the same
+    `_sdc_*` columns, `_sdc_table_version` included (null before any
+    ACTIVATE_VERSION), so the strict drift guard stays green."""
+    props = {"id": {"type": "integer"}, "name": {"type": "string"}}
+    config = TargetConfig(destination_path=str(tmp_path / "out"), add_record_metadata=True)
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "a.jsonl").write_text(json.dumps({"id": 1, "name": "ann"}) + "\n")
+    load(spark, config, "users", src, {"properties": props}, tmp_path)
+
+    pipe = SingerPipe(spark, config)
+    states = list(pipe.process_lines([
+        _schema_msg("users", props),
+        _rec("users", id=2, name="bob"),
+        json.dumps({"type": "STATE", "value": {"bookmark": 2}}),
+    ]))
+    assert states == ['{"bookmark":2}']
+    rows = spark.read.parquet(str(tmp_path / "out" / "users")).collect()
+    assert sorted(r.id for r in rows) == [1, 2]
+    assert all(r._sdc_table_version is None for r in rows)

@@ -9,8 +9,8 @@ import os
 import pytest
 
 from target_hdfs_spark.operators.multimodal import (
-    _IMG_GROUPS,
-    _group_pixels,
+    IMG_GROUPS,
+    group_pixels,
     encode_avi,
     encode_jpeg,
     encode_pcm_wav,
@@ -59,7 +59,7 @@ def test_stored_blobs_match_encoder_formulas(spark, media):
         )
         assert bytes(row["image"]) == expect_img
         assert bytes(row["image_png"]) == encode_png_full(
-            _group_pixels(doc_id % _IMG_GROUPS)
+            group_pixels(doc_id % IMG_GROUPS)
         )
         assert bytes(row["audio_wav"]) == encode_pcm_wav(doc_id)
         assert bytes(row["video_avi"]) == encode_avi(doc_id)

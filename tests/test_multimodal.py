@@ -195,24 +195,24 @@ def test_png_decoder_rejects_garbage():
 
 def test_dhash_groups_are_distinct():
     """q147's oracle equates hash-groups with content-groups; that
-    holds iff all _IMG_GROUPS synthetic images hash distinctly."""
+    holds iff all IMG_GROUPS synthetic images hash distinctly."""
     from target_hdfs_spark.operators.multimodal import (
-        _IMG_GROUPS,
-        _group_pixels,
+        IMG_GROUPS,
+        group_pixels,
         dhash64,
     )
 
-    hashes = {dhash64(_group_pixels(g)) for g in range(_IMG_GROUPS)}
-    assert len(hashes) == _IMG_GROUPS
+    hashes = {dhash64(group_pixels(g)) for g in range(IMG_GROUPS)}
+    assert len(hashes) == IMG_GROUPS
 
 
 def test_dhash_invariant_to_uniform_brightness():
     """The perceptual property dHash exists for: a uniform brightness
     shift must not change the signature (gradient directions are
     preserved; ties excluded by construction here)."""
-    from target_hdfs_spark.operators.multimodal import _group_pixels, dhash64
+    from target_hdfs_spark.operators.multimodal import group_pixels, dhash64
 
-    img = _group_pixels(7)
+    img = group_pixels(7)
     # shift into remaining headroom without wrapping or saturating ties
     lo, hi = min(map(min, img)), max(map(max, img))
     shift = min(10, 255 - hi)
@@ -264,7 +264,7 @@ def test_pcm_wav_roundtrip_exact():
     """encode_pcm_wav -> decode_pcm_samples must reproduce the sample
     formula bit-for-bit, including negative int16 values."""
     from target_hdfs_spark.operators.multimodal import (
-        _PCM_N,
+        PCM_N,
         _pcm_sample,
         decode_pcm_samples,
         encode_pcm_wav,
@@ -272,7 +272,7 @@ def test_pcm_wav_roundtrip_exact():
 
     for doc_id in (0, 1, 7, 12345):
         samples = decode_pcm_samples(encode_pcm_wav(doc_id))
-        assert samples == [_pcm_sample(doc_id, i) for i in range(_PCM_N)]
+        assert samples == [_pcm_sample(doc_id, i) for i in range(PCM_N)]
         assert min(samples) < 0 < max(samples)  # both signs exercised
 
 
@@ -294,7 +294,7 @@ def test_avi_container_roundtrip_exact():
     """encode_avi -> decode_avi_index must reproduce the frame-length
     formula exactly, including word-alignment padding for odd sizes."""
     from target_hdfs_spark.operators.multimodal import (
-        _AVI_MAX_FRAMES,
+        AVI_MAX_FRAMES,
         _frame_len,
         decode_avi_index,
         encode_avi,
@@ -302,7 +302,7 @@ def test_avi_container_roundtrip_exact():
 
     for doc_id in (0, 1, 5, 999):
         frames = decode_avi_index(encode_avi(doc_id))
-        n_expected = 1 + doc_id % _AVI_MAX_FRAMES
+        n_expected = 1 + doc_id % AVI_MAX_FRAMES
         assert [n for _, _, n in frames] == [
             _frame_len(doc_id, k) for k in range(n_expected)
         ]
@@ -311,7 +311,7 @@ def test_avi_container_roundtrip_exact():
         for k, off, n in frames:
             assert blob[off] == (doc_id + k) % 256
     # odd sizes exist in the range, so alignment was exercised
-    assert any(_frame_len(5, k) % 2 for k in range(1 + 5 % _AVI_MAX_FRAMES))
+    assert any(_frame_len(5, k) % 2 for k in range(1 + 5 % AVI_MAX_FRAMES))
 
 
 def test_avi_decoder_rejects_malformed():

@@ -9,7 +9,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from target_hdfs_spark.operators.packing import (
-    _PK_CTX,
+    PK_CTX,
     _SHUF_WINDOWS,
     packed_token_frame,
 )
@@ -49,14 +49,14 @@ def test_prefix_sum_conserves_tokens(spark):
 def test_packing_conserves_chunks(spark):
     f = packed_token_frame(spark, SF_DIR).collect()
     total = f[0]["total_toks"]
-    n_chunks_expected = (total + _PK_CTX - 1) // _PK_CTX
+    n_chunks_expected = (total + PK_CTX - 1) // PK_CTX
     rows = SPECS["q278_sequence_packing"].fn(spark, SF_DIR).collect()
     assert sum(r["n_chunks"] for r in rows) == n_chunks_expected
     # (doc, chunk) incidences counted from the histogram equal the
     # per-doc span sum
     spans = sum(
-        (r["cum_before"] + r["n_toks"] - 1) // _PK_CTX
-        - r["cum_before"] // _PK_CTX
+        (r["cum_before"] + r["n_toks"] - 1) // PK_CTX
+        - r["cum_before"] // PK_CTX
         + 1
         for r in f
     )

@@ -24,8 +24,8 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from target_hdfs_spark.operators.analytics import (
-    _qsk_bucket_expr,
-    _qsk_estimates,
+    qsk_bucket_expr,
+    qsk_estimates,
 )
 
 W, NBKT = 8, 64  # small instance: buckets over [0, 512)
@@ -53,9 +53,9 @@ def _brute_est(vals: list[int], p: int) -> int:
 def test_qsk_readout_is_midpoint_of_rank_bucket(spark, vals):
     df = spark.createDataFrame([(v,) for v in vals], "x long")
     hist = df.groupBy(
-        F.lit("g").alias("g"), _qsk_bucket_expr("x", W, NBKT).alias("bkt")
+        F.lit("g").alias("g"), qsk_bucket_expr("x", W, NBKT).alias("bkt")
     ).agg(F.count(F.lit(1)).alias("c"))
-    row = _qsk_estimates(hist, ["g"], W, (10, 50, 90), with_counts=True).first()
+    row = qsk_estimates(hist, ["g"], W, (10, 50, 90), with_counts=True).first()
     assert row["n_rows"] == len(vals)
     for p in (10, 50, 90):
         assert row[f"est_p{p}"] == _brute_est(vals, p), (vals, p)
@@ -76,7 +76,7 @@ def test_qsk_partial_merge_equals_direct(spark, vals, parts):
     from merged equals the readout from direct."""
     rows = [(v, parts[i % len(parts)]) for i, v in enumerate(vals)]
     df = spark.createDataFrame(rows, "x long, part long")
-    bkt = _qsk_bucket_expr("x", W, NBKT).alias("bkt")
+    bkt = qsk_bucket_expr("x", W, NBKT).alias("bkt")
     partials = df.groupBy(F.lit("g").alias("g"), "part", bkt).agg(
         F.count(F.lit(1)).alias("cell")
     )
@@ -88,8 +88,8 @@ def test_qsk_partial_merge_equals_direct(spark, vals, parts):
         merged.exceptAll(direct).count() == 0
         and direct.exceptAll(merged).count() == 0
     )
-    em = _qsk_estimates(merged, ["g"], W, (50,)).first()["est_p50"]
-    ed = _qsk_estimates(direct, ["g"], W, (50,)).first()["est_p50"]
+    em = qsk_estimates(merged, ["g"], W, (50,)).first()["est_p50"]
+    ed = qsk_estimates(direct, ["g"], W, (50,)).first()["est_p50"]
     assert em == ed == _brute_est(vals, 50)
 
 

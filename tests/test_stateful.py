@@ -3032,7 +3032,7 @@ def test_qsk_constants_and_bucket_match_batch_oracle():
     from target_hdfs_spark.operators.analytics import (
         _QSK_EV_NBKT,
         _QSK_EV_W,
-        _qsk_bucket_sql,
+        qsk_bucket_sql,
     )
     from target_hdfs_spark.streaming.stateful import (
         QSK_NBKT,
@@ -3042,7 +3042,7 @@ def test_qsk_constants_and_bucket_match_batch_oracle():
 
     assert (QSK_W, QSK_NBKT) == (_QSK_EV_W, _QSK_EV_NBKT)
     con = duckdb.connect()
-    expr = _qsk_bucket_sql("value * 100", QSK_W, QSK_NBKT)
+    expr = qsk_bucket_sql("value * 100", QSK_W, QSK_NBKT)
     for v in (0.0, 0.01, 0.29, 1.0, 123.45, 489.99, 655.35, 700.77, 1e6):
         (sql_bkt,) = con.execute(
             f"SELECT {expr} FROM (SELECT CAST({v!r} AS DOUBLE) AS value)"
@@ -3585,9 +3585,9 @@ def _pack_ord(doc_id: int) -> int:
 
 
 def _pack_bkt(doc_id: int) -> int:
-    from target_hdfs_spark.operators.packing import _PK_BKT_W
+    from target_hdfs_spark.operators.packing import PK_BKT_W
 
-    return _pack_ord(doc_id) // _PK_BKT_W
+    return _pack_ord(doc_id) // PK_BKT_W
 
 
 def _same_bucket_ids(n: int = 2, start: int = 0) -> list[int]:
@@ -4259,8 +4259,8 @@ def test_dsir_model_stream_matches_batch_on_shuffled_log(spark, tmp_path):
     from target_hdfs_spark.functions.hashing import md5_hash32
     from target_hdfs_spark.functions.textfuncs import shingles, tokens
     from target_hdfs_spark.operators.curation import (
-        _DSIR_B,
-        _DSIR_TGT_LANG,
+        DSIR_B,
+        DSIR_TGT_LANG,
     )
     from target_hdfs_spark.sources.readers import load_table
 
@@ -4276,7 +4276,7 @@ def test_dsir_model_stream_matches_batch_on_shuffled_log(spark, tmp_path):
         r["bucket"]: (r["cnt_r"], r["cnt_t"])
         for r in (
             bdf.select(
-                F.when(F.col("lang") == _DSIR_TGT_LANG, 1)
+                F.when(F.col("lang") == DSIR_TGT_LANG, 1)
                 .otherwise(0)
                 .alias("is_tgt"),
                 tokens("text").alias("toks"),
@@ -4287,7 +4287,7 @@ def test_dsir_model_stream_matches_batch_on_shuffled_log(spark, tmp_path):
                 F.explode(shingles(F.col("toks"), 2)).alias("gram"),
             )
             .select(
-                "is_tgt", (md5_hash32("gram") % _DSIR_B).alias("bucket")
+                "is_tgt", (md5_hash32("gram") % DSIR_B).alias("bucket")
             )
             .groupBy("bucket")
             .agg(
@@ -4329,7 +4329,7 @@ def test_dsir_model_state_is_bucket_bounded(spark, tmp_path):
     import json as _json
     import time as _t
 
-    from target_hdfs_spark.operators.curation import _DSIR_B
+    from target_hdfs_spark.operators.curation import DSIR_B
 
     src = tmp_path / "src"
     src.mkdir()
@@ -4352,7 +4352,7 @@ def test_dsir_model_state_is_bucket_bounded(spark, tmp_path):
         spark, src, "dsir_bound", with_progress=True
     )
     assert rows
-    assert state_rows and max(state_rows) <= _DSIR_B
+    assert state_rows and max(state_rows) <= DSIR_B
     # target counts never exceed raw counts on any emission
     assert all(0 <= r["cnt_t"] <= r["cnt_r"] for r in rows)
 

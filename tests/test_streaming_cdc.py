@@ -113,7 +113,7 @@ def test_replayed_batch_is_idempotent(spark, tmp_path):
     """Simulate foreachBatch replay after a crash between snapshot
     write and checkpoint commit: re-running the fold for the same
     batch id must leave the state unchanged."""
-    from target_hdfs_spark.streaming.sampling import _snapshot_versions
+    from target_hdfs_spark.streaming.sampling import snapshot_versions
 
     src, sink, ckpt = tmp_path / "src", tmp_path / "sink", tmp_path / "ckpt"
     _write_jsonl(src / "a.jsonl", ROWS_A)
@@ -121,12 +121,12 @@ def test_replayed_batch_is_idempotent(spark, tmp_path):
     before = {
         tuple(r) for r in current_state(spark, str(sink)).collect()
     }
-    replay_id = max(_snapshot_versions(spark, str(sink)))
+    replay_id = max(snapshot_versions(spark, str(sink)))
     batch_df = _to_df(spark, ROWS_A)
     # re-invoke the fold exactly as Structured Streaming would on
     # replay, via the module's building blocks (the fold closure is
     # internal to stream_cdc_apply)
-    prior = [v for v in _snapshot_versions(spark, str(sink)) if v < replay_id]
+    prior = [v for v in snapshot_versions(spark, str(sink)) if v < replay_id]
     merged = latest_per_key(classify_ops(batch_df))
     if prior:
         prev = spark.read.parquet(f"{sink}/snap={max(prior)}").select(
@@ -195,9 +195,9 @@ def test_cdc_snapshot_write_fans_out_with_key_space(spark, tmp_path):
         for r in current_state(spark, str(sink)).collect()
     }
     assert got == _batch_rule(spark, rows_a + rows_b)
-    from target_hdfs_spark.streaming.sampling import _snapshot_versions
+    from target_hdfs_spark.streaming.sampling import snapshot_versions
 
-    latest = max(_snapshot_versions(spark, str(sink)))
+    latest = max(snapshot_versions(spark, str(sink)))
     parts = glob.glob(f"{sink}/snap={latest}/part-*.parquet")
     assert len(parts) > 1, (
         f"snapshot write stayed single-partition ({len(parts)} file) "

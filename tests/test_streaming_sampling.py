@@ -10,9 +10,9 @@ from pyspark.sql import functions as F
 
 from target_hdfs_spark.streaming.sampling import (
     KEEP_SNAPSHOTS,
-    _snapshot_versions,
     doc_priority,
     latest_sample,
+    snapshot_versions,
     stream_priority_sample,
 )
 
@@ -81,7 +81,7 @@ def test_incomplete_snapshot_is_invisible(spark, tmp_path):
     src, sink, ckpt = tmp_path / "src", tmp_path / "sink", tmp_path / "ckpt"
     _write_jsonl(src / "a.jsonl", ROWS_A)
     _run(spark, src, sink, ckpt)
-    committed = max(_snapshot_versions(spark, str(sink)))
+    committed = max(snapshot_versions(spark, str(sink)))
     before = {
         (r.doc_id, r.priority) for r in latest_sample(spark, str(sink)).collect()
     }
@@ -91,7 +91,7 @@ def test_incomplete_snapshot_is_invisible(spark, tmp_path):
         [(999999, 1, 1e18)], "doc_id long, n_chars long, priority double"
     ).write.mode("overwrite").parquet(str(bogus))
     (bogus / "_SUCCESS").unlink()
-    assert committed + 7 not in _snapshot_versions(spark, str(sink))
+    assert committed + 7 not in snapshot_versions(spark, str(sink))
     after = {
         (r.doc_id, r.priority) for r in latest_sample(spark, str(sink)).collect()
     }
@@ -106,7 +106,7 @@ def test_snapshots_are_pruned(spark, tmp_path):
     for n in range(KEEP_SNAPSHOTS + 3):
         _write_jsonl(src / f"f{n}.jsonl", [(1000 * n + i, 100 + i) for i in range(5)])
         _run(spark, src, sink, ckpt)
-    versions = _snapshot_versions(spark, str(sink))
+    versions = snapshot_versions(spark, str(sink))
     assert len(versions) <= KEEP_SNAPSHOTS
     # and the surviving newest snapshot still equals the batch rule
     all_rows = [
